@@ -165,14 +165,6 @@ def _augment_zip_with_pyc(zip_path: str, out_path: str | None = None
     tmp = f"{dest}.pyc-{os.getpid()}.tmp"
     try:
         with zipfile.ZipFile(zip_path, "r") as zin:
-            if out_path is None:
-                names = set(zin.namelist())
-                marker = next((n for n in sorted(names)
-                               if n.endswith("/__init__.pyc")), None)
-                if marker is not None:
-                    head = zin.read(marker)[:4]
-                    if head == _iu.MAGIC_NUMBER:
-                        return  # already augmented, this interpreter
             with zipfile.ZipFile(tmp, "w",
                                  zipfile.ZIP_DEFLATED) as zout:
                 for info in zin.infolist():
@@ -210,7 +202,8 @@ def _augment_zip_with_pyc(zip_path: str, out_path: str | None = None
 #: sys.path IMMEDIATELY BEFORE its pristine source — so `import
 #: pyspark` resolves to the bytecode-augmented copy without mutating
 #: the Spark install. A stale/mismatched cache entry is simply
-#: skipped (the pristine zip keeps working).
+#: skipped (the pristine zip keeps working). It then runs the next
+#: ``sitecustomize`` on sys.path, which it would otherwise shadow.
 _SITECUSTOMIZE = '''\
 """spark-graft worker bytecode cache (see session.ensure_worker_\
 bytecode): shadow $SPARK_HOME/python/lib zips with pyc-augmented
@@ -247,6 +240,23 @@ def _activate():
 
 _activate()
 del _activate
+
+
+def _chain_shadowed():
+    # Python imports only the FIRST sitecustomize on sys.path: run the
+    # next one after this dir, so a site's own hook is not shadowed.
+    import importlib.machinery
+    import importlib.util
+
+    here = os.path.dirname(os.path.realpath(__file__))
+    dirs = [os.path.realpath(p or os.curdir) for p in sys.path]
+    rest = sys.path[dirs.index(here) + 1:] if here in dirs else []
+    spec = importlib.machinery.PathFinder.find_spec("sitecustomize", rest)
+    if spec is not None and spec.loader is not None:
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+
+_chain_shadowed()
+del _chain_shadowed
 '''
 
 
@@ -280,10 +290,7 @@ def ensure_worker_bytecode() -> None:
     ``sitecustomize.py`` that shadows each pristine zip on spawned
     workers' sys.path after validating source size+mtime; the cache
     dir rides the inherited ``PYTHONPATH``. $SPARK_HOME itself is
-    NEVER written to unless ``SPARK_GRAFT_ZIP_PYC_INPLACE=1``
-    explicitly opts into the r11 in-place rewrite (a persistent,
-    shared-install mutation — kept only for environments whose
-    spawn path strips PYTHONPATH). Disable everything with
+    never written to. Disable everything with
     ``SPARK_GRAFT_NO_ZIP_PYC=1``. Idempotent, atomic, best-effort."""
     global _WORKER_PYC_DONE
     if _WORKER_PYC_DONE or os.environ.get("SPARK_GRAFT_NO_ZIP_PYC"):
@@ -295,13 +302,6 @@ def ensure_worker_bytecode() -> None:
         return
     zips = [n for n in sorted(os.listdir(lib)) if n.endswith(".zip")]
     if not zips:
-        return
-    if os.environ.get("SPARK_GRAFT_ZIP_PYC_INPLACE"):
-        for name in zips:
-            try:
-                _augment_zip_with_pyc(os.path.join(lib, name))
-            except Exception:
-                continue  # best-effort: pristine zip keeps working
         return
     import importlib.util as _iu
     import json
@@ -333,7 +333,12 @@ def ensure_worker_bytecode() -> None:
                              "mtime_ns": int(st.st_mtime_ns)}
             changed = True
         site_py = os.path.join(cache, "sitecustomize.py")
-        if changed or not os.path.exists(site_py):
+        try:
+            with open(site_py) as fh:
+                changed = changed or fh.read() != _SITECUSTOMIZE
+        except OSError:
+            changed = True
+        if changed:  # new zips, or a sitecustomize.py with another body
             tmp = f"{man_path}.{os.getpid()}.tmp"
             with open(tmp, "w") as fh:
                 json.dump(manifest, fh)

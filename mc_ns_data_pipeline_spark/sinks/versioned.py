@@ -86,6 +86,7 @@ from __future__ import annotations
 import bisect
 import datetime as _dt
 import decimal
+import functools
 import json
 import math
 import os
@@ -211,6 +212,17 @@ def _ref_read(path: str) -> str | None:
             return fh.read().strip() or None
     except (FileNotFoundError, NotADirectoryError, IsADirectoryError):
         return None
+
+
+def _branch_head(table: str, branch: str | None) -> str | None:
+    """The snapshot a commit on ``branch`` extends: the branch's head
+    (HEADS only: a same-named tag must never become the fork point),
+    else CURRENT."""
+    if branch is not None:
+        staged = _ref_read(_ref_path(table, branch, "heads"))
+        if staged is not None:
+            return staged
+    return current_snapshot(table)
 
 
 def ref_snapshot(table: str, name: str) -> str | None:
@@ -967,33 +979,24 @@ def _gen_of(snapshot: str) -> int:
 def _read_mask_union_driver(spark: SparkSession, root: str, key: str,
                             entries: list[dict]) -> DataFrame | None:
     """The (__vt_dkey, __vt_dseq) union of one key column's delete
-    files as a DRIVER-LOCAL relation (LocalTableScan): pyarrow-read
-    the tiny mask files so the downstream broadcast build launches no
-    Spark scan job. None — caller unions via Spark, values identical
-    — when the files exceed the driver byte budget, are unreadable,
-    or carry types arrow can't concat (evolved key, exotic logical
-    type)."""
-    if _DRIVER_LAND_BYTES <= 0:
-        return None
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    files as a DRIVER-LOCAL relation (LocalTableScan, so the broadcast
+    build launches no scan job), read by ``_read_key_columns``. None —
+    caller unions via Spark, values identical — over the budget, on
+    unreadable files or on types arrow can't concat (evolved key)."""
+    import pyarrow as pa
 
-        paths = [os.path.join(root, d["file"]) for d in entries]
-        if sum(os.path.getsize(p) for p in paths) > _DRIVER_LAND_BYTES:
+    try:
+        arrs = _read_key_columns(
+            [os.path.join(root, d["file"]) for d in entries], key,
+            _DRIVER_LAND_BYTES)
+        if arrs is None:
             return None
-        arrs, seqs = [], []
-        for d, p in zip(entries, paths):
-            col = pq.read_table(p, columns=[key]).column(key)
-            arr = col.combine_chunks()
-            arrs.append(arr)
-            seqs.append(pa.array([int(d["seq"])] * len(arr),
-                                 pa.int64()))
-        tbl = pa.table({
+        seqs = [pa.array([int(d["seq"])] * len(a), pa.int64())
+                for d, a in zip(entries, arrs)]
+        return spark.createDataFrame(pa.table({
             "__vt_dkey": pa.concat_arrays(arrs),
             "__vt_dseq": pa.concat_arrays(seqs),
-        })
-        return spark.createDataFrame(tbl)
+        }))
     except Exception:
         return None
 
@@ -1045,23 +1048,16 @@ def _apply_delete_files(spark: SparkSession, table: str, df: DataFrame,
 
     def union_keys(key: str, entries: list[dict]) -> DataFrame:
         # Delete files are kilobytes by design (compaction clears
-        # them): within the driver byte budget, read them with
-        # pyarrow and hand the union to Spark as a LOCAL relation —
-        # the broadcast build then happens driver-side with no
-        # file-scan job per read (r12, guide §5). Over budget or on
-        # any arrow mismatch, the distributed union is unchanged.
+        # them): read them on the driver when the budget allows
+        # (r12, guide §5), else the distributed union is unchanged.
         local = _read_mask_union_driver(spark, root, key, entries)
         if local is not None:
             return local
-        deld = None
-        for d in entries:
-            part = (
-                spark.read.parquet(os.path.join(root, d["file"]))
-                .select(F.col(key).alias("__vt_dkey"),
-                        F.lit(int(d["seq"])).alias("__vt_dseq"))
-            )
-            deld = part if deld is None else deld.unionByName(part)
-        return deld
+        return functools.reduce(DataFrame.unionByName, (
+            spark.read.parquet(os.path.join(root, d["file"]))
+            .select(F.col(key).alias("__vt_dkey"),
+                    F.lit(int(d["seq"])).alias("__vt_dseq"))
+            for d in entries))
 
     rows = df
     if seq_by_key:
@@ -2176,12 +2172,17 @@ def _rebase_chain(table: str, head: str, base: str) -> list[dict]:
 
 def _land_in_pool(df: DataFrame, table: str) -> list[str]:
     """Write `df`'s rows as new immutable pool files; return their
-    pool-relative names. Staging-dir write, then per-file move into
-    the pool under fresh uuid names (never overwrites; a crash leaves
-    unreferenced pool files plus its staging dir — both reaped by
-    ``vacuum_snapshots`` once aged out)."""
+    pool-relative names."""
     staging = os.path.join(table, f"__staging-{uuid.uuid4().hex[:8]}")
     df.write.mode("overwrite").parquet(staging)
+    return _adopt_staged(table, staging)
+
+
+def _adopt_staged(table: str, staging: str) -> list[str]:
+    """Move every parquet file of a finished staging-dir write into the
+    pool under fresh uuid names and return them (never overwrites; a
+    crash leaves unreferenced pool files plus its staging dir — both
+    reaped by ``vacuum_snapshots`` once aged out)."""
     pool = _data_root(table)
     os.makedirs(pool, exist_ok=True)
     names = []
@@ -2195,43 +2196,26 @@ def _land_in_pool(df: DataFrame, table: str) -> list[str]:
     return names
 
 
-#: Byte budget for deriving a MOR commit's equality-delete mask on the
-#: DRIVER from the just-landed update files (guide §5: the driver may
-#: do O(KB-MB) metadata-sized work; a commit's mask is bounded by the
-#: batch, and the same key set is broadcast moments later anyway, so
-#: this adds no new scale risk). Above the budget — or for key types
-#: whose distinct semantics only Spark should decide (floats: NaN /
-#: -0.0 folding) — the distributed path runs unchanged. 0 disables.
-_DRIVER_LAND_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_DRIVER_LAND_BYTES", str(64 << 20)))
+#: Byte budget for a commit's driver-side mask work (guide §5: a mask
+#: is batch-sized and broadcast moments later anyway). Every driver
+#: read or collect of mask keys checks it first; 0 disables.
+_DRIVER_LAND_BYTES = 64 << 20
 
 
-def _land_arrow_in_pool(tbl, table: str, spark=None) -> list[str]:
+def _land_arrow_in_pool(tbl, table: str, spark: SparkSession) -> list[str]:
     """Land an in-driver ``pyarrow.Table`` as ONE immutable pool file —
     the zero-Spark-job landing for KB-sized commit relations
-    (equality-delete masks, collected key sets). Same staging-dir +
-    uuid-move discipline (and therefore the same crash/vacuum
-    contract) as ``_land_in_pool``; codec follows the session's
-    parquet codec so driver-written files match Spark-written ones."""
+    (equality-delete masks), with ``_land_in_pool``'s staging and
+    crash/vacuum contract; codec follows the session's parquet codec
+    so driver-written files match Spark-written ones."""
     import pyarrow.parquet as pq
 
-    codec = "snappy"  # Spark's spark.sql.parquet.compression.codec default
-    if spark is not None:
-        try:
-            codec = spark.conf.get(
-                "spark.sql.parquet.compression.codec") or codec
-        except Exception:
-            pass
     staging = os.path.join(table, f"__staging-{uuid.uuid4().hex[:8]}")
     os.makedirs(staging)
-    part = os.path.join(staging, "part-00000.parquet")
-    pq.write_table(tbl, part, compression=codec)
-    pool = _data_root(table)
-    os.makedirs(pool, exist_ok=True)
-    name = f"{uuid.uuid4().hex}.parquet"
-    shutil.move(part, os.path.join(pool, name))
-    shutil.rmtree(staging)
-    return [name]
+    pq.write_table(tbl, os.path.join(staging, "part-00000.parquet"),
+                   compression=spark.conf.get(
+                       "spark.sql.parquet.compression.codec"))
+    return _adopt_staged(table, staging)
 
 
 def _mask_type_ok(t) -> bool:
@@ -2248,60 +2232,88 @@ def _mask_type_ok(t) -> bool:
             or pa.types.is_decimal(t))
 
 
-def _driver_mask_from_files(spark: SparkSession, table: str,
-                            new_files: list[str], key: str,
-                            extra_mask_keys: DataFrame | None):
-    """MOR-merge mask fast path: derive the commit's equality-delete
-    mask (the update batch's distinct non-null keys) from the
-    just-landed files' key column ON THE DRIVER — the files are the
-    commit's own (O(batch) bytes, local), so a small batch needs no
-    second Spark job to read them, no distinct shuffle, and no write
-    job for the one-file mask. Returns ``(del_files,
-    batch_keys_df)`` or None to run the distributed path (budget
-    exceeded, float keys, unreadable files, arrow mismatch — every
-    exit is the unchanged slow path, mirroring
-    ``_footer_rows_and_stats``)."""
-    if _DRIVER_LAND_BYTES <= 0:
+def _read_key_columns(paths: list[str], key: str, budget: int):
+    """The budgeted driver read behind every driver-side mask: each
+    parquet file's ``key`` column as one pyarrow array, or None when
+    there are no files or their bytes exceed ``budget`` (checked
+    before any file is opened). Unreadable files raise."""
+    import pyarrow.parquet as pq
+
+    if not paths or sum(os.path.getsize(p) for p in paths) > budget:
         return None
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow ships with repo
-        return None
-    root = _data_root(table)
-    paths = [os.path.join(root, f) for f in new_files]
-    try:
-        if sum(os.path.getsize(p) for p in paths) > _DRIVER_LAND_BYTES:
+    return [pq.read_table(p, columns=[key]).column(key).combine_chunks()
+            for p in paths]
+
+
+def _driver_mask_keys(paths: list[str], key: str, df: DataFrame | None):
+    """The distinct non-null ``key`` values of the parquet ``paths``
+    plus ``df`` as a one-column pyarrow table, or None when the driver
+    may not compute them: nothing to read, a key type whose distinct
+    is Spark's to decide, or over the byte budget. The files' bytes
+    are charged first; ``df`` is then collected through
+    ``limit(n + 1)``, ``n`` being the values the rest of the budget
+    holds, so an oversized frame is refused after n+1 rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    budget = _DRIVER_LAND_BYTES
+    arrs = []
+    if paths:
+        arrs = _read_key_columns(paths, key, budget)
+        if arrs is None or not _mask_type_ok(arrs[0].type):
             return None
-        cols = [pq.read_table(p, columns=[key]) for p in paths]
-    except Exception:
-        return None  # unreadable/remote/missing column: Spark path
-    typ = cols[0].schema.field(key).type
-    if not _mask_type_ok(typ):
+        budget -= sum(os.path.getsize(p) for p in paths)
+    if df is not None:
+        sel = df.select(key)
+        typ = to_arrow_type(sel.schema[0].dataType)
+        # bytes per value: the fixed width, else a string's estimate
+        width = (max(typ.bit_width // 8, 1) if pa.types.is_primitive(typ)
+                 else 24)
+        n = budget // width
+        if n <= 0 or not _mask_type_ok(typ):
+            return None
+        got = sel.limit(n + 1).toArrow()
+        if got.num_rows > n or got.nbytes > budget:
+            return None
+        arrs.append(got.column(0).combine_chunks())
+    if not arrs:
         return None
+    keys = pa.concat_arrays([a.cast(arrs[0].type) for a in arrs])
+    return pa.table({key: pc.unique(keys.drop_null())})
+
+
+def _land_mask(spark: SparkSession, table: str, key: str,
+               files: list[str] = (), df: DataFrame | None = None):
+    """Land a MOR commit's equality-delete mask, the distinct non-null
+    ``key`` values of the pool ``files`` and/or ``df``; return
+    ``(del_files, keys_df, n_keys)``. The one place a commit chooses
+    driver or distributed landing. Within the driver budget
+    (``_driver_mask_keys``) pyarrow writes one file, no Spark job, and
+    ``keys_df`` is a LocalTableScan. Every other exit takes the
+    distributed path once, here: a Spark distinct, a ``coalesce(1)``
+    landing, the landed file read back."""
+    root = _data_root(table)
+    paths = [os.path.join(root, f) for f in files]
     try:
-        arr = pa.concat_tables(cols).column(key).combine_chunks()
-        uniq = pc.unique(arr.drop_null())
-        if extra_mask_keys is not None:
-            # tiny by contract (the caller's delete-key set); one
-            # bounded collect replaces the union+distinct+write job
-            ex = (extra_mask_keys.select(key).toArrow()
-                  .column(key).combine_chunks().drop_null())
-            uniq = pc.unique(pa.concat_arrays(
-                [uniq, ex.cast(typ)]))
-        keys_tbl = pa.table({key: uniq})
-        del_files = _land_arrow_in_pool(keys_tbl, table, spark)
-    except Exception:
-        return None
-    try:
-        # LocalTableScan: the decrement count's broadcast build runs
-        # driver-side, no scan job over the just-written mask file
-        batch_keys = spark.createDataFrame(keys_tbl)
-    except Exception:
-        batch_keys = spark.read.parquet(
-            *(os.path.join(root, f) for f in del_files))
-    return del_files, batch_keys
+        tbl = _driver_mask_keys(paths, key, df)
+        del_files = (None if tbl is None
+                     else _land_arrow_in_pool(tbl, table, spark))
+    except Exception:  # unreadable file, arrow mismatch: Spark path
+        tbl = del_files = None
+    if del_files is not None:
+        try:
+            return del_files, spark.createDataFrame(tbl), tbl.num_rows
+        except Exception:  # no local relation for this type: read back
+            pass
+    else:
+        parts = [spark.read.parquet(*paths).select(key)] if paths else []
+        parts += [df.select(key)] if df is not None else []
+        keys = (functools.reduce(DataFrame.unionByName, parts)
+                .distinct().filter(F.col(key).isNotNull()))
+        del_files = _land_in_pool(keys.coalesce(1), table)
+    return (del_files, _read_pool(spark, table, del_files, None),
+            _count_pool_rows(spark, table, del_files))
 
 
 def _publish(table: str, files: list[str], rows: int,
@@ -3242,13 +3254,7 @@ def append_snapshot(df: DataFrame, table: str,
     os.makedirs(table, exist_ok=True)
     spark = df.sparkSession
 
-    def _head() -> str | None:
-        if branch is not None:  # HEADS only: a same-named tag must
-            staged = _ref_read(  # never become the fork point
-                _ref_path(table, branch, "heads"))
-            if staged is not None:
-                return staged  # extend the branch, not CURRENT
-        return current_snapshot(table)
+    _head = functools.partial(_branch_head, table, branch)
 
     if txn_id is not None:  # cheap pre-check: a replayed batch skips
         applied = _txn_already_applied(table, txn_id,  # the landing
@@ -4121,12 +4127,7 @@ def merge_snapshot_mor(spark: SparkSession, updates: DataFrame,
     stays exact."""
     os.makedirs(table, exist_ok=True)
 
-    def _head() -> str | None:
-        if branch is not None:  # HEADS only (same rule as append)
-            staged = _ref_read(_ref_path(table, branch, "heads"))
-            if staged is not None:
-                return staged
-        return current_snapshot(table)
+    _head = functools.partial(_branch_head, table, branch)
 
     if txn_id is not None:  # cheap pre-check: replayed batch skips
         applied = _txn_already_applied(table, txn_id, start=_head())
@@ -4169,37 +4170,12 @@ def merge_snapshot_mor(spark: SparkSession, updates: DataFrame,
     new_blooms = _scan_blooms(spark, table, new_files, bloom_cols,
                               updates.schema)
     # The mask: the batch's distinct keys, derived from the landed
-    # files (one pass over the caller's lineage — the write). Small
-    # batches derive and land the mask ON THE DRIVER (r12, guide §5 —
-    # zero extra Spark jobs); larger ones keep the distributed path.
-    root = _data_root(table)
-    fast_mask = _driver_mask_from_files(spark, table, new_files, key,
-                                        extra_mask_keys)
-    if fast_mask is not None:
-        del_files, batch_keys = fast_mask
-        matched = _mor_matched(spark, table, base_man, key,
-                               batch_keys)
-    else:
-        batch_keys = (spark.read.parquet(
-            *(os.path.join(root, f) for f in new_files))
-            .select(key).distinct().filter(F.col(key).isNotNull()))
-        if extra_mask_keys is not None:  # upsert+delete, one commit:
-            batch_keys = (batch_keys     # widen the mask, not the rows
-                          .unionByName(extra_mask_keys.select(key))
-                          .distinct().filter(F.col(key).isNotNull()))
-        # The delete-file landing and the live-match count are
-        # independent jobs over the same tiny key set — run them
-        # concurrently so the second job's tasks back-fill the
-        # first's tail (guide §2.6).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_del = _pool.submit(
-                lambda: _land_in_pool(batch_keys.coalesce(1), table))
-            _f_matched = _pool.submit(
-                _mor_matched, spark, table, base_man, key, batch_keys)
-            del_files = _f_del.result()
-            matched = _f_matched.result()
+    # files (one pass over the caller's lineage — the write), widened
+    # by extra_mask_keys. Small masks derive and land on the driver
+    # (r12, guide §5 — zero extra Spark jobs); see _land_mask.
+    del_files, batch_keys, _ = _land_mask(spark, table, key, new_files,
+                                          extra_mask_keys)
+    matched = _mor_matched(spark, table, base_man, key, batch_keys)
     entries = [{"file": f, "key": key, "seq": None}
                for f in del_files]
 
@@ -4829,12 +4805,7 @@ def delete_keys_mor(spark: SparkSession, table: str, key: str,
     full refresh: conflict). ``branch`` stages the mask on a named ref
     for write-audit-publish."""
 
-    def _head() -> str | None:
-        if branch is not None:
-            staged = _ref_read(_ref_path(table, branch, "heads"))
-            if staged is not None:
-                return staged
-        return current_snapshot(table)
+    _head = functools.partial(_branch_head, table, branch)
 
     base = _head()
     if base is None:
@@ -4846,41 +4817,11 @@ def delete_keys_mor(spark: SparkSession, table: str, key: str,
         raise ValueError(f"delete key {key!r} not in table schema")
     # ---- staging: NO lease held ----
     # Land the delete file FIRST, then derive everything else
-    # (count, span, decrement join) from the landed kilobytes —
-    # the caller's doomed lineage may be an expensive query and
-    # is evaluated exactly once: by a bounded COLLECT on the fast
-    # path (the same key set is broadcast for the decrement count
-    # moments later, so driver residence is already this commit's
-    # contract — guide §5; the one-file write then happens driver-
-    # side with no Spark write job), or by the write on the
-    # fallback. An empty batch leaves one orphan pool file (vacuum
-    # reaps it, same as a pre-flip crash) and publishes nothing.
-    doomed_sel = (doomed.select(key).distinct()
-                  .filter(F.col(key).isNotNull()))
-    del_files = doomed_keys = None
-    if _DRIVER_LAND_BYTES > 0:
-        try:
-            tbl = doomed_sel.toArrow()
-            del_files = _land_arrow_in_pool(tbl, table, spark)
-            n_keys = tbl.num_rows
-        except Exception:
-            del_files = None  # arrow-unsupported type: write path
-        if del_files is not None:
-            try:
-                # LocalTableScan: downstream broadcast builds (the
-                # decrement count, span/bloom predicate collect) run
-                # driver-side, no scan job over the landed file
-                doomed_keys = spark.createDataFrame(tbl)
-            except Exception:
-                doomed_keys = None  # read the landed file below
-    if del_files is None:
-        del_files = _land_in_pool(doomed_sel.coalesce(1), table)
-        # footer row count: the landed file IS the distinct key set
-        n_keys = _count_pool_rows(spark, table, del_files)
-    root = _data_root(table)
-    if doomed_keys is None:
-        doomed_keys = spark.read.parquet(
-            *(os.path.join(root, f) for f in del_files))
+    # (count, span, decrement join) from the landed kilobytes. An
+    # empty batch leaves one orphan pool file (vacuum reaps it, same
+    # as a pre-flip crash) and publishes nothing.
+    del_files, doomed_keys, n_keys = _land_mask(spark, table, key,
+                                                df=doomed)
     if n_keys == 0:
         return base  # nothing to forget: current stays
 

@@ -16,12 +16,9 @@ def test_query_matches_oracle(spark, sf_dir, name):
 
 
 def test_every_oracle_has_a_query():
-    assert set(ORACLES) <= set(QUERIES)
-
-
-def test_queries_nonempty(spark, sf_dir):
-    for name, fn in QUERIES.items():
-        assert fn(spark, sf_dir).count() >= 0, name
+    """Oracles and queries pair one-to-one, so the parametrized oracle
+    test above executes every registered query."""
+    assert set(ORACLES) == set(QUERIES)
 
 
 # The external driver hash-checks the FIRST 50 names of queries() in

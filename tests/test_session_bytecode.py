@@ -9,9 +9,13 @@ from __future__ import annotations
 
 import importlib
 import importlib.util
+import json
+import os
+import subprocess
 import sys
 import zipfile
 
+from mc_ns_data_pipeline_spark import session as S
 from mc_ns_data_pipeline_spark.session import _augment_zip_with_pyc
 
 
@@ -47,14 +51,17 @@ def test_augment_adds_preferred_bytecode(tmp_path):
             sys.modules.pop(m, None)
 
 
-def test_augment_is_idempotent(tmp_path):
-    import os
+def _members(zp):
+    with zipfile.ZipFile(zp) as z:
+        return {n: z.read(n) for n in z.namelist()}
 
+
+def test_augment_is_idempotent(tmp_path):
     zp = _make_zip(tmp_path / "t.zip")
     _augment_zip_with_pyc(zp)
-    before = (os.path.getmtime(zp), os.path.getsize(zp))
-    _augment_zip_with_pyc(zp)  # marker present: must not rewrite
-    assert (os.path.getmtime(zp), os.path.getsize(zp)) == before
+    before = _members(zp)
+    _augment_zip_with_pyc(zp)  # re-run regenerates the same members
+    assert _members(zp) == before
 
 
 def test_augment_replaces_stale_magic(tmp_path):
@@ -71,31 +78,32 @@ def test_augment_replaces_stale_magic(tmp_path):
                                  "toypkg/mod.pyc"]
 
 
-def _fake_spark_home(tmp_path):
-    import os
-
-    home = tmp_path / "sparkhome"
-    lib = home / "python" / "lib"
+def _cache_mode(tmp_path, monkeypatch):
+    """A fake $SPARK_HOME with one toy zip, bytecode cache enabled:
+    (pristine zip, cache dir)."""
+    lib = tmp_path / "sparkhome" / "python" / "lib"
     os.makedirs(lib)
     zp = _make_zip(lib / "pyspark.zip")
-    return str(home), zp
+    cache = str(tmp_path / "cache")
+    monkeypatch.setenv("SPARK_HOME", str(tmp_path / "sparkhome"))
+    monkeypatch.setenv("SPARK_GRAFT_PYC_CACHE", cache)
+    monkeypatch.delenv("SPARK_GRAFT_NO_ZIP_PYC", raising=False)
+    monkeypatch.setattr(S, "_WORKER_PYC_DONE", False)
+    return zp, cache
+
+
+def _spawn(pythonpath, code="import toypkg; print(toypkg.__spec__.origin)"):
+    """stdout of a fresh interpreter run with ``pythonpath``."""
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(pythonpath))
+    return subprocess.run([sys.executable, "-c", code],
+                          capture_output=True, text=True, env=env,
+                          check=True).stdout
 
 
 def test_cache_mode_leaves_spark_home_untouched(tmp_path, monkeypatch):
     """Default (r12): augmented COPIES land in the cache dir; the
     install's zips are byte-identical afterwards (VERDICT r11 #9)."""
-    import json
-    import os
-
-    from mc_ns_data_pipeline_spark import session as S
-
-    home, zp = _fake_spark_home(tmp_path)
-    cache = str(tmp_path / "cache")
-    monkeypatch.setenv("SPARK_HOME", home)
-    monkeypatch.setenv("SPARK_GRAFT_PYC_CACHE", cache)
-    monkeypatch.delenv("SPARK_GRAFT_ZIP_PYC_INPLACE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_NO_ZIP_PYC", raising=False)
-    monkeypatch.setattr(S, "_WORKER_PYC_DONE", False)
+    zp, cache = _cache_mode(tmp_path, monkeypatch)
     before = open(zp, "rb").read()
     S.ensure_worker_bytecode()
     assert open(zp, "rb").read() == before  # install NOT mutated
@@ -115,47 +123,34 @@ def test_cache_sitecustomize_shadows_pristine_zip(tmp_path,
     """A spawned process with the worker-shaped PYTHONPATH (pristine
     zip first, cache dir after — PythonWorkerFactory's ordering) must
     import from the CACHED bytecode zip via sitecustomize."""
-    import os
-    import subprocess
-    import sys
-
-    from mc_ns_data_pipeline_spark import session as S
-
-    home, zp = _fake_spark_home(tmp_path)
-    cache = str(tmp_path / "cache")
-    monkeypatch.setenv("SPARK_HOME", home)
-    monkeypatch.setenv("SPARK_GRAFT_PYC_CACHE", cache)
-    monkeypatch.delenv("SPARK_GRAFT_ZIP_PYC_INPLACE", raising=False)
-    monkeypatch.setattr(S, "_WORKER_PYC_DONE", False)
+    zp, cache = _cache_mode(tmp_path, monkeypatch)
     S.ensure_worker_bytecode()
-    env = dict(os.environ)
-    env["PYTHONPATH"] = os.pathsep.join([zp, cache])
-    out = subprocess.run(
-        [sys.executable, "-c",
-         "import toypkg; print(toypkg.__spec__.origin)"],
-        capture_output=True, text=True, env=env, check=True)
-    origin = out.stdout.strip()
+    origin = _spawn([zp, cache]).strip()
     assert origin.startswith(cache), origin
     assert origin.endswith("__init__.pyc")
     # stale cache (source zip rewritten): sitecustomize declines and
     # the pristine source serves the import
     _make_zip(zp)  # bumps mtime/size
-    out2 = subprocess.run(
-        [sys.executable, "-c",
-         "import toypkg; print(toypkg.__spec__.origin)"],
-        capture_output=True, text=True, env=env, check=True)
-    assert out2.stdout.strip().startswith(zp)
+    assert _spawn([zp, cache]).strip().startswith(zp)
 
 
-def test_inplace_mode_still_available_by_optin(tmp_path, monkeypatch):
-    from mc_ns_data_pipeline_spark import session as S
-
-    home, zp = _fake_spark_home(tmp_path)
-    monkeypatch.setenv("SPARK_HOME", home)
-    monkeypatch.setenv("SPARK_GRAFT_ZIP_PYC_INPLACE", "1")
-    monkeypatch.delenv("SPARK_GRAFT_NO_ZIP_PYC", raising=False)
+def test_cache_sitecustomize_chains_shadowed_sitecustomize(tmp_path,
+                                                           monkeypatch):
+    """A site's own sitecustomize later on PYTHONPATH still runs: the
+    cache one chain-loads it after shadowing the pristine zip."""
+    zp, cache = _cache_mode(tmp_path, monkeypatch)
+    other = tmp_path / "site"
+    other.mkdir()
+    (other / "sitecustomize.py").write_text(
+        "import sys\nsys.site_marker = 'other-site'\n")
+    S.ensure_worker_bytecode()
+    with open(os.path.join(cache, "sitecustomize.py"), "w") as fh:
+        fh.write("# an older body\n")  # must be refreshed
     monkeypatch.setattr(S, "_WORKER_PYC_DONE", False)
     S.ensure_worker_bytecode()
-    with zipfile.ZipFile(zp) as z:
-        assert z.read("toypkg/__init__.pyc")[:4] == \
-            importlib.util.MAGIC_NUMBER
+    marker, origin = _spawn(
+        [zp, cache, str(other)],
+        "import sys, toypkg; print(sys.site_marker); "
+        "print(toypkg.__spec__.origin)").split()
+    assert marker == "other-site"
+    assert origin.startswith(cache) and origin.endswith("__init__.pyc")

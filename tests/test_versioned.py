@@ -15,6 +15,7 @@ import time
 
 import pytest
 
+from mc_ns_data_pipeline_spark.session import scoped_conf
 from mc_ns_data_pipeline_spark.sinks import versioned as V
 from mc_ns_data_pipeline_spark.sinks.lease import (
     TableLockedError,
@@ -284,7 +285,9 @@ def test_crash_before_flip_leaves_old_state(spark, tmp_path):
     assert V.read_current(spark, table).count() == 1
 
 
-def test_concurrent_merge_one_wins_one_fails(spark, tmp_path):
+def test_concurrent_merge_one_wins_one_fails(spark, tmp_path,
+                                             monkeypatch):
+    monkeypatch.setattr(V, "_COMMIT_WAIT_S", 0.5)  # fail fast, same path
     table = str(tmp_path / "t")
     V.write_snapshot(_df(spark, [(1, "a")]), table)
     with table_lease(table, owner="other-pipeline"):
@@ -1651,21 +1654,24 @@ def _spec_df(spark, n=2000):
         rows, "event_id long, ts timestamp, user_id long, value double")
 
 
+#: Pins the layout of spec'd landings under test: AQE coalesces tiny
+#: test batches to one file (right in prod, untestable), and a spec'd
+#: landing writes one file per shuffle partition, whose count would
+#: otherwise follow the core count.
+_SPEC_LAYOUT_CONF = {
+    "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    "spark.sql.shuffle.partitions": "16",
+}
+
+
 def test_partition_spec_clusters_and_prunes(spark, tmp_path):
     import datetime as dt
 
     table = str(tmp_path / "t")
-    # pin partition count for the layout assertion (AQE coalesces tiny
-    # test batches to one file, which is right in prod but untestable)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                   "false")
-    try:
+    with scoped_conf(spark, _SPEC_LAYOUT_CONF):
         snap = V.write_snapshot(
             _spec_df(spark), table,
             partition_spec=["days(ts)", "bucket(8, user_id)"])
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                       "true")
     man = V.read_manifest(table, snap)
     assert man["partition_spec"] == [
         {"transform": "days", "col": "ts"},
@@ -1801,14 +1807,9 @@ def test_partition_spec_zorder_prunes_both_dimensions(spark, tmp_path):
             for i in range(4000)]
     df = spark.createDataFrame(rows, "id long, a double, b double")
     table = str(tmp_path / "t")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                   "false")
-    try:
+    with scoped_conf(spark, _SPEC_LAYOUT_CONF):
         snap = V.write_snapshot(df, table,
                                 partition_spec=["zorder(a, b)"])
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                       "true")
     man = V.read_manifest(table, snap)
     assert man["partition_spec"] == [
         {"transform": "zorder", "cols": ["a", "b"]}]
