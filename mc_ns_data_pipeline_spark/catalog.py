@@ -7,12 +7,14 @@ events documents embeddings — one parquet per table under an sf dir.
 from __future__ import annotations
 
 import os
-from functools import lru_cache
+import threading
+from collections import OrderedDict
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -28,28 +30,88 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-@lru_cache(maxsize=256)
-def _nanos_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as INT64 TIMESTAMP(NANOS) in the parquet footer.
+def _parquet_files(path: str) -> list[str]:
+    """The parquet files ``spark.read.parquet(path)`` reads, sorted: the
+    file itself, or a directory walked recursively (partitioned layouts
+    nest files under key=value dirs) skipping the hidden/metadata
+    entries the reader also ignores (_SUCCESS, .crc, _temporary).
+    A missing path lists nothing."""
+    if os.path.isfile(path):
+        return [path]
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        files += [os.path.join(root, f) for f in names
+                  if f.endswith(".parquet")
+                  and not f.startswith((".", "_"))]
+    return sorted(files)
 
-    Spark has no nanosecond timestamp type; with
-    `spark.sql.legacy.parquet.nanosAsLong=true` they surface as LongType
-    and we down-convert to microsecond timestamps (driver-side footer
-    read only — cheap at any scale).
+
+_SCHEMA_MEMO_MAX = 256
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def _schema_memo(sc) -> OrderedDict:
+    """The per-SparkContext schema memo (LRU order): kept on the context
+    like ``session.ensure_package_on_executors``' flag, so a new context
+    starts empty."""
+    memo = getattr(sc, "_mcns_schema_memo", None)
+    if memo is None:
+        memo = sc._mcns_schema_memo = OrderedDict()
+    return memo
+
+
+def _source_schema(spark: SparkSession, path: str
+                   ) -> tuple[StructType, tuple[str, ...]] | None:
+    """Spark's own inferred schema of a parquet source, plus the columns
+    its footer stores as INT64 TIMESTAMP(NANOS), memoized per file
+    version.
+
+    Inference (``spark.read.parquet(path).schema``) is a Spark job; the
+    memo key is the path plus the sorted (relpath, size, mtime_ns) of
+    its files, so a rewritten file or a replaced part file re-infers.
+    Spark has no nanosecond timestamp type: with
+    `spark.sql.legacy.parquet.nanosAsLong=true` (pinned by the caller
+    through `session.ensure_read_confs`) those columns surface as
+    LongType and `load_table` down-converts them to microseconds.
+    Returns None when the path lists no files (missing, empty, not a
+    local path): the caller then reads it as plain Spark would.
     """
-    if os.path.isdir(path):
-        # multi-file table: any part file carries the footer schema
-        parts = sorted(
-            f for f in os.listdir(path) if f.endswith(".parquet")
-        )
-        if not parts:
-            return ()
-        path = os.path.join(path, parts[0])
-    schema = pq.read_schema(path)
-    return tuple(
-        n for n, t in zip(schema.names, schema.types)
-        if isinstance(t, pa.TimestampType) and t.unit == "ns"
-    )
+    files = _parquet_files(path)
+    try:
+        sig = tuple((os.path.relpath(f, path), st.st_size, st.st_mtime_ns)
+                    for f in files for st in (os.stat(f),))
+    except OSError:
+        return None
+    if not sig:
+        return None
+    key = (path, sig)
+    with _SCHEMA_MEMO_LOCK:
+        memo = _schema_memo(spark.sparkContext)
+        hit = memo.get(key)
+        if hit is not None:
+            memo.move_to_end(key)
+            return hit
+    # Inferred outside the lock: concurrent misses on one version each
+    # infer once and store the same answer.
+    schema = spark.read.parquet(path).schema
+    footer = pq.read_schema(files[0])  # any part file carries it
+    hit = (schema, tuple(
+        n for n, t in zip(footer.names, footer.types)
+        if isinstance(t, pa.TimestampType) and t.unit == "ns"))
+    with _SCHEMA_MEMO_LOCK:
+        memo[key] = hit
+        while len(memo) > _SCHEMA_MEMO_MAX:
+            memo.popitem(last=False)
+    return hit
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """``spark.read.parquet(path).schema`` without the inference job
+    when this file version was read before (see `_source_schema`). The
+    returned object is the memo's own: do not mutate it."""
+    hit = _source_schema(spark, path)
+    return hit[0] if hit else spark.read.parquet(path).schema
 
 
 def ensure_fan_out(df: DataFrame) -> DataFrame:
@@ -87,9 +149,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     # __spark_entry__ with a plain SparkSession); sessions from
     # get_spark already carry these and are untouched.
     ensure_read_confs(spark)
-    df = spark.read.parquet(path)
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    for c in _nanos_ts_columns(path):
+    schema, nanos = _source_schema(spark, path) or (None, ())
+    # An unlistable path is inferred by Spark (a missing one raises).
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
+    types = {f.name: f.dataType.simpleString()
+             for f in schema.fields} if nanos else {}
+    for c in nanos:
         # integer nanos -> micros (exact: `div` is integral division).
         # Guard on the surfaced type: with nanosAsLong the ns column
         # arrives as bigint, but a table rewritten with µs timestamps
@@ -107,22 +173,8 @@ def table_rows(sf_dir: str, name: str) -> int:
     to pick a literal (a cluster-count knob, a witness constant) spend
     one footer read instead of a count() job; the number is exact by
     the format, identical to ``load_table(...).count()``."""
-    import pyarrow.parquet as pq
-
     path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        # Recurse like spark.read.parquet (partitioned layouts nest
-        # files under key=value dirs); skip hidden/metadata entries
-        # the reader also ignores (_SUCCESS, .crc, _temporary).
-        files = []
-        for root, dirs, names in os.walk(path):
-            dirs[:] = sorted(d for d in dirs
-                             if not d.startswith((".", "_")))
-            files += [os.path.join(root, f) for f in sorted(names)
-                      if f.endswith(".parquet")
-                      and not f.startswith((".", "_"))]
-    else:
-        files = [path]
+    files = _parquet_files(path)
     if not files:
         # load_table(...).count() would raise on an empty/missing
         # table dir; silently returning 0 here would let a bad

@@ -53,10 +53,12 @@ def windowed_event_aggregate(events: DataFrame) -> DataFrame:
 def _events_stream(spark: SparkSession, events_path: str,
                    schema=None) -> DataFrame:
     """readStream over the events parquet, handling INT64(NANOS) ts."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    from mc_ns_data_pipeline_spark.catalog import parquet_schema
+    from mc_ns_data_pipeline_spark.session import ensure_read_confs
+
+    ensure_read_confs(spark)
     if schema is None:
-        schema = spark.read.parquet(events_path).schema
+        schema = parquet_schema(spark, events_path)
     # The streaming file source requires a *directory*. When given a
     # single parquet file, stage a symlink to it inside a temp dir (a
     # local-test convenience only — real deployments stream directories).

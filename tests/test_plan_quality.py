@@ -721,3 +721,24 @@ def test_x113_chunking_is_map_only_until_sort(spark, sf_dir):
     assert n_ops(plan, "Exchange") <= 2
     assert "RoundRobinPartitioning" in plan
     assert "Generate" in plan  # the sequence() explode
+
+
+def test_q01_to_q16_builds_fire_no_spark_jobs(spark, sf_dir):
+    """Building a plan is driver work only: once each source table was
+    read, `load_table` reuses its memoized schema, so no q01-q16 build
+    may submit a Spark job (a schema-inference job per `load_table` was
+    most of the build time on the short reference queries)."""
+    from mc_ns_data_pipeline_spark.catalog import TABLES, load_table
+
+    for name in TABLES:
+        load_table(spark, sf_dir, name)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    fired = {}
+    for name in sorted(QUERIES):
+        if not name.startswith("q") or name >= "q17":
+            continue
+        before = dag.nextJobId()
+        QUERIES[name](spark, sf_dir)
+        if dag.nextJobId() != before:
+            fired[name] = dag.nextJobId() - before
+    assert not fired, f"plan builds fired Spark jobs: {fired}"
