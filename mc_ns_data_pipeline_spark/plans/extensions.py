@@ -3386,7 +3386,7 @@ def x103_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     scattered 1k-key delete makes the COW shape rewrite nearly every
     located file (full row width), while MOR writes kilobytes and
     defers the rewrite to the next compaction — readers pay one
-    broadcast anti-join until then. Reference anchor: DELETE FROM
+    driver-built scan filter until then. Reference anchor: DELETE FROM
     processed_files (file_processor.py), which PostgreSQL serves as a
     row-level transactional delete."""
     import os

@@ -37,7 +37,8 @@ Layout::
 * Deletes come in BOTH physical shapes: ``delete_keys_snapshot`` is
   copy-on-write (rewrite affected files now), ``delete_keys_mor`` is
   MERGE-ON-READ (land a tiny equality-delete file; readers mask rows
-  via a generation-sequenced broadcast anti-join; the next compaction
+  with a generation-sequenced literal filter on the scan, built on the
+  driver from the delete files; the next compaction
   applies and clears the masks). COW optimizes reads, MOR optimizes
   scattered deletes on huge tables — Iceberg v2's trade, selectable
   per call.
@@ -95,7 +96,10 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    BinaryType, BooleanType, DateType, DecimalType, StringType,
+    StructField, StructType,
+)
 
 from mc_ns_data_pipeline_spark.sinks.lease import table_lease
 
@@ -976,49 +980,30 @@ def _gen_of(snapshot: str) -> int:
     return int(snapshot.split("-", 1)[0])
 
 
-def _read_mask_union_driver(spark: SparkSession, root: str, key: str,
-                            entries: list[dict]) -> DataFrame | None:
-    """The (__vt_dkey, __vt_dseq) union of one key column's delete
-    files as a DRIVER-LOCAL relation (LocalTableScan, so the broadcast
-    build launches no scan job), read by ``_read_key_columns``. None —
-    caller unions via Spark, values identical — over the budget, on
-    unreadable files or on types arrow can't concat (evolved key)."""
-    import pyarrow as pa
-
-    try:
-        arrs = _read_key_columns(
-            [os.path.join(root, d["file"]) for d in entries], key,
-            _DRIVER_LAND_BYTES)
-        if arrs is None:
-            return None
-        seqs = [pa.array([int(d["seq"])] * len(a), pa.int64())
-                for d, a in zip(entries, arrs)]
-        return spark.createDataFrame(pa.table({
-            "__vt_dkey": pa.concat_arrays(arrs),
-            "__vt_dseq": pa.concat_arrays(seqs),
-        }))
-    except Exception:
-        return None
-
-
 def _apply_delete_files(spark: SparkSession, table: str, df: DataFrame,
                         man: dict, names: list[str]) -> DataFrame:
     """Mask rows hidden by the manifest's merge-on-read delete files.
 
-    ``df`` must be a scan (optionally filtered) over exactly ``names``
-    — file provenance via ``input_file_name`` is what sequences each
-    row. A delete entry masks a row iff the keys match AND the row's
-    data file landed at a generation STRICTLY BELOW the delete's
-    generation: rows (re-)inserted after a delete are untouched, and —
-    the tie case — data files landed by the delete's OWN commit are
-    exempt, which is what lets a merge-on-read upsert publish its new
-    row versions and the mask over the old ones atomically together
-    (``merge_snapshot_mor``). Per key column,
-    all delete files union into one broadcast side (delete batches are
-    small by design; compaction clears them), max-seq per key — one
-    broadcast left_anti join per distinct delete-key column, no
-    shuffle of the data side. No delete files -> ``df`` unchanged,
-    zero plan overhead (pruned-read pushdown is unaffected)."""
+    ``df`` must be a scan (optionally filtered or projected) over
+    exactly ``names`` — each row's data file, from the scan's
+    ``_metadata.file_name``, is what sequences it. A delete entry
+    masks a row iff the keys match AND the row's data file landed at a
+    generation STRICTLY BELOW the delete's generation: rows
+    (re-)inserted after a delete are untouched, and — the tie case —
+    data files landed by the delete's OWN commit are exempt, which is
+    what lets a merge-on-read upsert publish its new row versions and
+    the mask over the old ones atomically together
+    (``merge_snapshot_mor``).
+
+    Delete files are kilobytes by design (compaction clears them), so
+    the driver reads each key column's delete files within
+    ``_DRIVER_LAND_BYTES`` and masks with ONE deterministic filter on
+    the scan (``_mask_terms``): no join, no broadcast, no shuffle, no
+    job before the read's own. Over the budget, over
+    ``_IN_LIST_MAX`` literals, for key types without exact literals
+    (``_literal_of``) or when pyarrow cannot read a delete file, that
+    key column takes a broadcast anti-join instead (``_mask_by_join``).
+    No delete files -> ``df`` unchanged."""
     dels = man.get("delete_files") or []
     if not dels:
         return df
@@ -1026,65 +1011,121 @@ def _apply_delete_files(spark: SparkSession, table: str, df: DataFrame,
     root = _data_root(table)
     # Files missing from file_seq (legacy manifests) sequence as 0:
     # they predate every possible delete commit, so deletes apply.
-    seq_of = {n: int(file_seq.get(os.path.basename(n), 0))
+    seq_of = {os.path.basename(n): int(file_seq.get(os.path.basename(n), 0))
               for n in names}
-    max_seq = max(seq_of.values(), default=0)
-
-    # The sequence check is decided per (delete entry, file set), and
-    # the common case — no data file landed at-or-after the delete —
-    # decides it VACUOUSLY: the delete masks every file in scan. Such
-    # entries take a plain broadcast key anti-join, skipping the
-    # per-row input_file_name split and the file→generation map join
-    # entirely (measured: the sequenced plumbing costs ~0.8 s of fixed
-    # broadcast latency per read at any table size). Only entries some
-    # scanned file ties or postdates need the sequenced path — strict
-    # `>`: an entry whose seq EQUALS max_seq may share a commit with
-    # the max-seq files (MOR upsert) and must not mask them.
-    global_by_key: dict[str, list[dict]] = {}
-    seq_by_key: dict[str, list[dict]] = {}
+    by_key: dict[str, list[dict]] = {}
     for d in dels:
-        tgt = global_by_key if d["seq"] > max_seq else seq_by_key
-        tgt.setdefault(d["key"], []).append(d)
+        by_key.setdefault(d["key"], []).append(d)
+    joined = {}
+    rows = df
+    for key, entries in by_key.items():
+        # a data column named _metadata hides the scan's metadata from
+        # SQL text; only metadataColumn still reaches it
+        terms = (None if "_metadata" in df.columns else _mask_terms(
+            root, key, df.schema[key].dataType, entries, seq_of))
+        if terms is None:
+            joined[key] = entries
+        elif terms:
+            rows = rows.filter(F.expr(
+                f"NOT coalesce({' OR '.join(terms)}, false)"))
+    if not joined:
+        return rows
+    # The file name attaches while the plan is still one scan: the
+    # joins below add a second source.
+    rows = rows.withColumn("__vt_fname",
+                           df.metadataColumn("_metadata").file_name)
+    for key, entries in joined.items():
+        rows = _mask_by_join(spark, rows, root, key, entries, seq_of)
+    return rows.drop("__vt_fname")
 
-    def union_keys(key: str, entries: list[dict]) -> DataFrame:
-        # Delete files are kilobytes by design (compaction clears
-        # them): read them on the driver when the budget allows
-        # (r12, guide §5), else the distributed union is unchanged.
-        local = _read_mask_union_driver(spark, root, key, entries)
-        if local is not None:
-            return local
+
+def _mask_terms(root: str, key: str, dtype, entries: list[dict],
+                seq_of: dict[str, int]) -> list[str] | None:
+    """One key column's delete entries as SQL disjuncts, a row being
+    masked iff one holds: per delete generation ``s``, ``key IN K_s
+    AND _metadata.file_name IN F_<s`` — ``K_s`` the distinct non-null keys of
+    the entries at ``s``, ``F_<s`` the scanned files sequenced
+    strictly below ``s`` (written as NOT IN the complement when that
+    list is shorter; dropped when every file qualifies). A NULL key
+    never matches, as in the join. [] when nothing can be masked; None
+    (the caller joins instead) when the key type has no exact literal,
+    the files exceed ``_DRIVER_LAND_BYTES``, the keys exceed
+    ``_IN_LIST_MAX`` or pyarrow cannot read a file."""
+    import pyarrow as pa
+
+    if _literal_of(dtype) is None:
+        return None
+    try:
+        arrs = _read_key_columns(
+            [os.path.join(root, d["file"]) for d in entries], key,
+            _DRIVER_LAND_BYTES)
+    except (OSError, pa.ArrowException):
+        return None  # Spark reads the file, or reports why it cannot
+    if arrs is None:
+        return None
+    keys_at: dict[int, dict] = {}
+    for d, a in zip(entries, arrs):
+        keys_at.setdefault(int(d["seq"]), {}).update(
+            dict.fromkeys(a.drop_null().to_pylist()))
+    if sum(map(len, keys_at.values())) > _IN_LIST_MAX:
+        return None
+    terms = []
+    for s, keys in sorted(keys_at.items()):
+        below = [f for f, fs in seq_of.items() if fs < s]
+        if not keys or not below:
+            continue
+        term = _sql_in(_sql_ident(key), dtype, keys)
+        if term is None:
+            return None
+        if len(below) < len(seq_of):
+            rest = [f for f, fs in seq_of.items() if fs >= s]
+            short = below if len(below) <= len(rest) else rest
+            fin = _sql_in("_metadata.file_name", StringType(), short)
+            if fin is None:
+                return None
+            term = (f"({term} AND {fin})" if short is below
+                    else f"({term} AND NOT {fin})")
+        terms.append(term)
+    return terms
+
+
+def _mask_by_join(spark: SparkSession, rows: DataFrame, root: str,
+                  key: str, entries: list[dict],
+                  seq_of: dict[str, int]) -> DataFrame:
+    """``_mask_terms``'s fallback: one key column's delete files
+    unioned by Spark into broadcast anti-joins. Entries newer than
+    every scanned file mask by key alone; the rest join a file →
+    generation map (a driver-built LocalTableScan) and mask only rows
+    sequenced strictly below them."""
+    import pyarrow as pa
+
+    def union_keys(ents: list[dict]) -> DataFrame:
         return functools.reduce(DataFrame.unionByName, (
             spark.read.parquet(os.path.join(root, d["file"]))
             .select(F.col(key).alias("__vt_dkey"),
                     F.lit(int(d["seq"])).alias("__vt_dseq"))
-            for d in entries))
+            for d in ents))
 
-    rows = df
-    if seq_by_key:
-        # input_file_name() resolves only over a SINGLE-source plan —
-        # it must attach to the raw (possibly filtered) scan BEFORE
-        # any anti-join introduces a second source.
-        rows = rows.withColumn(
-            "__vt_fname",
-            F.element_at(F.split(F.input_file_name(), "/"), -1))
-    for key, entries in global_by_key.items():
-        deld = union_keys(key, entries).select("__vt_dkey").distinct()
+    max_seq = max(seq_of.values(), default=0)
+    newer = [d for d in entries if d["seq"] > max_seq]
+    tied = [d for d in entries if d["seq"] <= max_seq]
+    if newer:
+        deld = union_keys(newer).select("__vt_dkey").distinct()
         rows = rows.join(F.broadcast(deld),
                          F.col(key) == F.col("__vt_dkey"), "left_anti")
-    if seq_by_key:
-        fmap = spark.createDataFrame(
-            [(os.path.basename(n), s) for n, s in seq_of.items()],
-            "__vt_fname string, __vt_seq long")
-        rows = rows.join(F.broadcast(fmap), "__vt_fname", "left")
-        for key, entries in seq_by_key.items():
-            deld = union_keys(key, entries).groupBy("__vt_dkey").agg(
-                F.max("__vt_dseq").alias("__vt_dseq"))
-            rows = rows.join(
-                F.broadcast(deld),
-                (F.col(key) == F.col("__vt_dkey"))
-                & (F.col("__vt_seq") < F.col("__vt_dseq")),
-                "left_anti")
-        rows = rows.drop("__vt_fname", "__vt_seq")
+    if tied:
+        fmap = spark.createDataFrame(pa.table({
+            "__vt_fname": pa.array(list(seq_of), pa.string()),
+            "__vt_seq": pa.array(list(seq_of.values()), pa.int64()),
+        }))
+        deld = union_keys(tied).groupBy("__vt_dkey").agg(
+            F.max("__vt_dseq").alias("__vt_dseq"))
+        rows = (rows.join(F.broadcast(fmap), "__vt_fname", "left")
+                .join(F.broadcast(deld),
+                      (F.col(key) == F.col("__vt_dkey"))
+                      & (F.col("__vt_seq") < F.col("__vt_dseq")),
+                      "left_anti")
+                .drop("__vt_seq"))
     return rows
 
 
@@ -2230,6 +2271,99 @@ def _mask_type_ok(t) -> bool:
             or pa.types.is_large_binary(t) or pa.types.is_boolean(t)
             or pa.types.is_date(t) or pa.types.is_timestamp(t)
             or pa.types.is_decimal(t))
+
+
+#: Most literals one driver-built IN list carries. Past it Catalyst's
+#: analysis of the list and the plan shipped with every task cost more
+#: than a broadcast join's fixed latency (measured on a 4-core host: a
+#: 10k-key list ~1 s per read, 100k keys ~5 s).
+_IN_LIST_MAX = 10_000
+
+_INT_LITERALS = {"tinyint": (8, "Y"), "smallint": (16, "S"),
+                 "int": (32, ""), "bigint": (64, "L")}
+
+
+def _literal_of(t):
+    """A renderer of Python values as Spark SQL literals of exactly
+    type ``t``, or None for types whose Python values do not
+    round-trip exactly: floats (NaN and -0.0 equality are Spark's to
+    decide), timestamps (a naive local datetime loses its instant in a
+    DST fold), collated strings and nested types. The renderer returns
+    the literal text; "" for a value no ``t`` value can equal (an
+    integer out of range, a decimal that does not fit), which an IN
+    list may drop; None for a value of a foreign Python type."""
+    name = t.simpleString()
+    if isinstance(t, BooleanType):
+        return lambda v: (("true" if v else "false")
+                          if isinstance(v, bool) else None)
+    if name in _INT_LITERALS:
+        bits, suffix = _INT_LITERALS[name]
+        lo, hi = -(1 << bits - 1), 1 << bits - 1
+
+        def int_lit(v):
+            if not isinstance(v, int) or isinstance(v, bool):
+                return None
+            return f"{v}{suffix}" if lo <= v < hi else ""
+        return int_lit
+    if isinstance(t, DecimalType):
+        quantum = decimal.Decimal(1).scaleb(-t.scale)
+        ctx = decimal.Context(prec=t.precision + 2)
+
+        def dec_lit(v):
+            if not isinstance(v, (int, decimal.Decimal)) or isinstance(
+                    v, bool):
+                return None
+            d = decimal.Decimal(v)
+            if not d.is_finite() or (
+                    d and d.adjusted() >= t.precision - t.scale):
+                return ""
+            q = ctx.quantize(d, quantum)
+            return f"CAST({q:f}BD AS {name})" if q == d else ""
+        return dec_lit
+    if isinstance(t, DateType):
+        return lambda v: (f"DATE'{v.isoformat()}'"
+                          if type(v) is _dt.date else None)
+    if name == "string":
+        def str_lit(v):
+            if not isinstance(v, str):
+                return None
+            try:
+                return f"CAST(X'{v.encode().hex()}' AS STRING)"
+            except UnicodeEncodeError:  # lone surrogate: not UTF-8
+                return None
+        return str_lit
+    if isinstance(t, BinaryType):
+        return lambda v: (f"X'{bytes(v).hex()}'"
+                          if isinstance(v, (bytes, bytearray)) else None)
+    return None
+
+
+def _sql_ident(name: str) -> str:
+    """A column name quoted for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_in(col: str, t, values) -> str | None:
+    """``col IN (values)`` as SQL text (``col`` a SQL expression, e.g.
+    ``_sql_ident(name)``), every literal typed exactly as
+    the column (``_literal_of``): ``F.expr`` parses it in one call,
+    where ``Column.isin`` pays a py4j round trip per value. Values no
+    ``t`` value can equal drop out; an empty list is ``false``. None
+    when ``t`` has no exact literals, a value is of a foreign type, or
+    there are more than ``_IN_LIST_MAX`` values."""
+    lit = _literal_of(t)
+    if lit is None or len(values) > _IN_LIST_MAX:
+        return None
+    out = []
+    for v in values:
+        text = lit(v)
+        if text is None:
+            return None
+        if text:
+            out.append(text)
+    if not out:
+        return "false"
+    return f"{col} IN ({', '.join(out)})"
 
 
 def _read_key_columns(paths: list[str], key: str, budget: int):
@@ -3464,6 +3598,19 @@ def compact_snapshot(spark: SparkSession, table: str,
 _BLOOM_PROBE_MAX_KEYS = 100_000  # bounded driver collect for probing
 
 
+def _bounded_collect(df: DataFrame, n: int) -> list | None:
+    """``df``'s rows when there are at most ``n`` — collected through
+    ``limit(n + 1)``, so an oversized frame is refused after n+1 rows
+    — else None."""
+    rows = df.limit(n + 1).collect()
+    return None if len(rows) > n else rows
+
+
+#: ``vals`` default of the key-batch planners: collect the batch's
+#: bounded values only if the pass needs them.
+_UNCOLLECTED = object()
+
+
 def _bounded_key_vals(key: str, keys_df: DataFrame) -> list | None:
     """ONE bounded evaluation of a key batch: its non-NULL values
     when small enough to probe (<= _BLOOM_PROBE_MAX_KEYS) and NaN-free
@@ -3473,9 +3620,9 @@ def _bounded_key_vals(key: str, keys_df: DataFrame) -> list | None:
     [min, max] aggregate. Shared by the inline candidate cut and the
     chunked predicate builder so the conservatism rules cannot
     drift."""
-    rows = (keys_df.filter(F.col(key).isNotNull())
-            .limit(_BLOOM_PROBE_MAX_KEYS + 1).collect())
-    if len(rows) > _BLOOM_PROBE_MAX_KEYS:
+    rows = _bounded_collect(keys_df.filter(F.col(key).isNotNull()),
+                            _BLOOM_PROBE_MAX_KEYS)
+    if rows is None:
         return None
     vals = [r[0] for r in rows]
     if any(isinstance(v, float) and math.isnan(v) for v in vals):
@@ -3483,8 +3630,8 @@ def _bounded_key_vals(key: str, keys_df: DataFrame) -> list | None:
     return vals
 
 
-def _stat_candidates(man: dict, key: str, keys_df: DataFrame
-                     ) -> list[str]:
+def _stat_candidates(man: dict, key: str, keys_df: DataFrame,
+                     vals=_UNCOLLECTED) -> list[str]:
     """The manifest files a key batch can possibly touch — the
     metadata-only planning cut shared by the COW locate step and the
     MOR decrement count. Two passes: [min, max] span intersection
@@ -3500,7 +3647,8 @@ def _stat_candidates(man: dict, key: str, keys_df: DataFrame
     # ONE evaluation of the caller's key lineage: the bounded
     # collect serves both the span (computed driver-side) and the
     # bloom probe; oversized/NaN batches fall back to the agg span.
-    vals = _bounded_key_vals(key, keys_df)
+    if vals is _UNCOLLECTED:
+        vals = _bounded_key_vals(key, keys_df)
     if has_stats:
         if vals is not None:
             if not vals:
@@ -3573,14 +3721,16 @@ def _affected_scan(spark: SparkSession, table: str,
     }
 
 
-def _key_batch_predicates(key: str, keys_df: DataFrame) -> list[tuple]:
+def _key_batch_predicates(key: str, keys_df: DataFrame,
+                          vals=_UNCOLLECTED) -> list[tuple]:
     """A key batch as pruning predicates — the chunked locate's
     candidate cut. Bounded batches become one IN-list (span + batch
     bloom probe apply); oversized or NaN-bearing batches fall back to
     the [min, max] span conjuncts (blooms sit out, stats still cut).
     Conservative-complete either way: a file holding a batch key
     always survives."""
-    vals = _bounded_key_vals(key, keys_df)
+    if vals is _UNCOLLECTED:
+        vals = _bounded_key_vals(key, keys_df)
     if vals is not None:
         # Pre-sorted probe: the stats check bisects (O(log k)/file)
         # instead of scanning the whole batch per file.
@@ -3980,56 +4130,68 @@ def _observed_count(df: DataFrame):
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+def _key_semi(df: DataFrame, key: str, keys_df: DataFrame,
+              vals: list | None) -> DataFrame:
+    """``df``'s rows whose ``key`` is in the batch: a literal IN filter
+    over the batch's bounded values (``_sql_in``; no broadcast, no
+    job), else a broadcast semi-join on ``keys_df``."""
+    pred = (None if vals is None
+            else _sql_in(_sql_ident(key), df.schema[key].dataType,
+                         vals))
+    if pred is not None:
+        return df.filter(F.expr(pred))
+    return df.join(F.broadcast(keys_df), key, "left_semi")
+
+
 def _mor_live_matches(spark: SparkSession, table: str,
                       parent_man: dict, key: str,
-                      keys_df: DataFrame) -> int:
+                      keys_df: DataFrame, vals: list | None) -> int:
     """Exact live-row decrement shared by the MOR delete and the MOR
     upsert: count the parent snapshot's LIVE rows matching ``keys_df``
-    over stats-surviving candidate files only, key-column-pruned —
-    the cheap half of the COW locate step, without the rewrite."""
-    candidates = _stat_candidates(parent_man, key, keys_df)
+    (bounded values ``vals``) over stats-surviving candidate files
+    only, key-column-pruned — the cheap half of the COW locate step,
+    without the rewrite."""
+    candidates = _stat_candidates(parent_man, key, keys_df, vals)
     if not candidates:
         return 0
-    return (
+    return _key_semi(
         _read_live(spark, table, parent_man, candidates,
-                   _schema_from_man(parent_man))
-        .select(key)
-        .join(F.broadcast(keys_df), key, "left_semi")
-        .count()
-    )
+                   _schema_from_man(parent_man)).select(key),
+        key, keys_df, vals).count()
 
 
 def _mor_live_matches_chunked(spark: SparkSession, table: str,
                               core: dict, key: str,
-                              keys_df: DataFrame) -> int:
+                              keys_df: DataFrame, vals: list | None
+                              ) -> int:
     """`_mor_live_matches` for CHUNKED manifests: the candidate cut
     loads only the sidecars the key batch's span/bloom predicates can
     hit — the decrement count stays O(chunks hit) in metadata, like
     every other chunked planning pass."""
     plan = _prune_chunked(table, core,
-                          _key_batch_predicates(key, keys_df))
+                          _key_batch_predicates(key, keys_df, vals))
     candidates = plan["kept"]
     if not candidates:
         return 0
     hybrid = {**core, "file_seq": plan["file_seq"]}
-    return (
+    return _key_semi(
         _read_live(spark, table, hybrid, candidates,
-                   _schema_from_man(core))
-        .select(key)
-        .join(F.broadcast(keys_df), key, "left_semi")
-        .count()
-    )
+                   _schema_from_man(core)).select(key),
+        key, keys_df, vals).count()
 
 
 def _mor_matched(spark: SparkSession, table: str, man: dict,
-                 key: str, keys_df: DataFrame) -> int:
+                 key: str, keys_df: DataFrame,
+                 vals=_UNCOLLECTED) -> int:
     """Live-row decrement for a key batch against one manifest,
     chunked or inline — the cheap key-column count every MOR commit's
     row accounting rides on."""
+    if vals is _UNCOLLECTED:
+        vals = _bounded_key_vals(key, keys_df)
     if "chunks" in man:
         return _mor_live_matches_chunked(spark, table, man, key,
-                                         keys_df)
-    return _mor_live_matches(spark, table, man, key, keys_df)
+                                         keys_df, vals)
+    return _mor_live_matches(spark, table, man, key, keys_df, vals)
 
 
 def _rebase_mor_matched(spark: SparkSession, table: str,
@@ -4063,14 +4225,11 @@ def _rebase_mor_matched(spark: SparkSession, table: str,
         appended = [f for m in chain for f in (m.get("new_files") or [])]
         if not appended:
             return matched_base
-        return matched_base + (
+        return matched_base + _key_semi(
             _read_pool(spark, table, appended,
                        _schema_from_man(head_man),
-                       renames=head_man.get("renames"))
-            .select(key)
-            .join(F.broadcast(keys_df), key, "left_semi")
-            .count()
-        )
+                       renames=head_man.get("renames")).select(key),
+            key, keys_df, _bounded_key_vals(key, keys_df)).count()
     return _mor_matched(spark, table, head_man, key, keys_df)
 
 
@@ -4092,9 +4251,10 @@ def merge_snapshot_mor(spark: SparkSession, updates: DataFrame,
     case (a uniform 1% batch on a range-clustered table → every file
     holds an updated key → 0 files reused, full-table rewrite) becomes
     batch-bytes + kilobytes of delete file. The trade is the same as
-    ``delete_keys_mor``: readers pay a broadcast anti-join per
-    delete-key column until ``compact_snapshot``/``optimize_table``
-    applies the masks. Row accounting stays exact via the stats-pruned
+    ``delete_keys_mor``: readers pay a driver read of the delete files
+    and a literal filter per delete-key column (a broadcast anti-join
+    past the driver budget) until ``compact_snapshot``/
+    ``optimize_table`` applies the masks. Row accounting stays exact via the stats-pruned
     key-column-only live-match count (the locate step's cheap half).
 
     Prefer COW ``merge_snapshot`` when batches are key-clustered (it
@@ -4543,7 +4703,9 @@ def optimize_table(spark: SparkSession, table: str,
        accumulated past their thresholds: more than ``max_small_files``
        files below half the ``target_file_rows`` fill, or more than
        ``max_delete_files`` pending delete files (each costs every
-       reader a broadcast anti-join until applied). The default of 4
+       reader a driver read and a wider scan filter until applied,
+       and a broadcast anti-join past the driver budget). The default
+       of 4
        comes from the measured cadence curve (BASELINE.md round-5 MOR
        row: +1.75 s fixed once any mask pends, ~0.24 s per additional
        mask, compaction ~14 s @15M): ``k* = sqrt(2·C/(ρ·slope))`` ≈ 4–6
@@ -4772,9 +4934,9 @@ def delete_keys_mor(spark: SparkSession, table: str, key: str,
                     branch: str | None = None) -> str:
     """Right-to-be-forgotten as a MERGE-ON-READ commit: land the doomed
     keys as one tiny delete file and publish — NO data file is read in
-    full or rewritten. Readers mask matching rows at scan time via a
-    broadcast anti-join sequenced by file generation
-    (``_apply_delete_files``), so rows re-inserted AFTER the delete
+    full or rewritten. Readers mask matching rows at scan time with a
+    filter sequenced by file generation (``_apply_delete_files``), so
+    rows re-inserted AFTER the delete
     survive, exactly like the COW variant followed by an append.
 
     This is the 100 TB complement to ``delete_keys_snapshot`` (COW):
@@ -4783,9 +4945,10 @@ def delete_keys_mor(spark: SparkSession, table: str, key: str,
     write amplification), while MOR writes kilobytes and defers the
     physical rewrite to the next ``compact_snapshot``, which applies
     the masks and CLEARS the delete files (Iceberg v2 equality-delete
-    semantics). The trade: until compaction, every read pays one
-    broadcast anti-join per delete-key column — size the compaction
-    cadence to the read/delete ratio.
+    semantics). The trade: until compaction, every read pays a driver
+    read of the delete files and one literal filter per delete-key
+    column (a broadcast anti-join past the driver budget) — size the
+    compaction cadence to the read/delete ratio.
 
     Row accounting stays EXACT without the rewrite: the decrement is
     counted from a stats-pruned, column-pruned scan of candidate files

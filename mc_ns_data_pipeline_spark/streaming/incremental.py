@@ -19,6 +19,8 @@ a status log for cross-run dedup, and per-lot delete+insert replacement
 
 from __future__ import annotations
 
+import decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1373,7 +1375,7 @@ def run_stream_apply_changes(spark: SparkSession, source: str,
     unbounded) bound each micro-batch's admitted lineage — the scale
     lever for a replica that fell far behind: the per-batch net
     window, the staged delete/upsert sides, and (in the matview
-    variant) the broadcast touched-key set are all O(batch events),
+    variant) the touched-key IN list are all O(batch events),
     which is only a bound if the feed is capped. Because
     Trigger.AvailableNow admits exactly ONE bounded batch per run,
     capped drains loop availableNow runs until the committed offset
@@ -1429,9 +1431,9 @@ def matview_delta_batch(spark: SparkSession, batch_df: DataFrame,
     sum_value) incrementally from one change-feed batch — streaming
     IVM with DELETE support, the part equality-delete feeds usually
     punt on: delete events carry only the key, so the retracted
-    row's contribution is recovered by joining the delete keys
-    against the REPLICA's pre-batch state (which this consumer also
-    maintains — apply AFTER the view update, see ordering below).
+    row's contribution is recovered from the REPLICA's pre-batch
+    state (which this consumer also maintains — apply AFTER the view
+    update, see ordering below).
 
     Crash/replay contract (Spark replays the one batch a crash can
     leave uncommitted):
@@ -1450,6 +1452,16 @@ def matview_delta_batch(spark: SparkSession, batch_df: DataFrame,
     discards it. Groups whose count reaches zero stay in the view
     with n=0 (no delete commit needed; re-inserts revive them).
 
+    Scale: a capped batch's delta is computed on the driver
+    (``_view_delta_local``) from three bounded collects — the net
+    actions, the replica's pre-batch rows for the touched keys and
+    the view's rows for the touched groups, each read through a
+    literal IN filter — and reaches the view merge as a
+    LocalTableScan. Past ``_IN_LIST_MAX`` rows or keys, or for group
+    and key types without exact literals, the same delta is planned
+    in Spark (``_view_delta_spark``: broadcast left-semis, a
+    full-outer join with the view).
+
     ``net``: optionally the precomputed (and persisted)
     ``_net_actions(batch_df, key)`` relation — run_stream_matview
     shares one net between this and apply_change_batch so the
@@ -1457,47 +1469,15 @@ def matview_delta_batch(spark: SparkSession, batch_df: DataFrame,
     persistence."""
     from mc_ns_data_pipeline_spark.sinks import versioned as V
 
-    meta = ("_change_type", "_commit_gen", "_rn")
     own_net = net is None
     if own_net:
         net = _net_actions(batch_df, key)
         net.persist()
     try:
-        ups = net.filter(F.col("_change_type") == "insert") \
-                 .drop(*meta)
-        keys = net.select(key)  # every touched key retracts its
-        # pre-batch contribution: an upsert replaces, a delete removes
-        pre = (V.read_current(spark, replica)
-               .join(F.broadcast(keys), key, "left_semi")
-               .select(F.col(group_col).alias("g"),
-                       F.lit(-1).alias("dn"),
-                       (-F.col(value_col)).alias("dv")))
-        add = ups.select(F.col(group_col).alias("g"),
-                         F.lit(1).alias("dn"),
-                         F.col(value_col).alias("dv"))
-        delta = (pre.unionByName(add)
-                 .groupBy("g")
-                 .agg(F.sum("dn").cast("long").alias("dn"),
-                      F.sum(F.col("dv").cast("decimal(18,4)"))
-                       .alias("dv")))
-        cur = (V.read_current(spark, view) if
-               V.current_snapshot(view) is not None else
-               spark.createDataFrame(
-                   [], f"g {delta.schema['g'].dataType.simpleString()}"
-                       ", n long, sum_value decimal(18,4)"))
-        new = (delta.join(cur, "g", "full_outer")
-               .select(
-                   "g",
-                   (F.coalesce(F.col("n"), F.lit(0))
-                    + F.coalesce(F.col("dn"), F.lit(0)))
-                   .cast("long").alias("n"),
-                   (F.coalesce(F.col("sum_value"),
-                               F.lit(0).cast("decimal(18,4)"))
-                    + F.coalesce(F.col("dv"),
-                                 F.lit(0).cast("decimal(18,4)")))
-                   .cast("decimal(18,4)").alias("sum_value"))
-               .join(F.broadcast(delta.select("g")), "g",
-                     "left_semi"))  # touch only changed groups
+        args = (spark, net, replica, view, key, group_col, value_col)
+        new = _view_delta_local(*args)
+        if new is None:
+            new = _view_delta_spark(*args)
         if V.current_snapshot(view) is None:
             V.write_snapshot(new, view, txn_id=txn_id)
         else:
@@ -1506,6 +1486,136 @@ def matview_delta_batch(spark: SparkSession, batch_df: DataFrame,
     finally:
         if own_net:
             net.unpersist()
+
+
+#: The one decimal type view sums are kept in, on both engines, and
+#: the first magnitude it cannot hold.
+_SUM_TYPE = "decimal(18,4)"
+_SUM_LIMIT = decimal.Decimal(10) ** 14
+
+
+def _view_delta_local(spark: SparkSession, net: DataFrame,
+                      replica: str, view: str, key: str,
+                      group_col: str, value_col: str
+                      ) -> DataFrame | None:
+    """``matview_delta_batch``'s new (g, n, sum_value) rows for the
+    changed groups, computed on the driver with exact ``Decimal``
+    sums, as a LocalTableScan; None when a collect passes
+    ``_IN_LIST_MAX`` rows, the key or group type has no exact literal,
+    the group types differ between net, replica and view, the view
+    holds a group twice, or a sum leaves ``decimal(18,4)``. NULL
+    groups are dropped, as ``_view_delta_spark``'s semi-join on ``g``
+    drops them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import BinaryType
+
+    from mc_ns_data_pipeline_spark.sinks import versioned as V
+
+    bound = V._IN_LIST_MAX
+    rep = V.read_current(spark, replica)
+    cur_df = (V.read_current(spark, view)
+              if V.current_snapshot(view) is not None else None)
+    gtype = rep.schema[group_col].dataType
+    if (V._literal_of(gtype) is None or isinstance(gtype, BinaryType)
+            or net.schema[group_col].dataType != gtype
+            or (cur_df is not None
+                and cur_df.schema["g"].dataType != gtype)):
+        return None  # groups key a Python dict: hashable, exact types
+    acts = V._bounded_collect(
+        net.select(key, "_change_type", F.col(group_col).alias("g"),
+                   F.col(value_col).cast(_SUM_TYPE).alias("v")), bound)
+    if acts is None:
+        return None
+    pred = V._sql_in(V._sql_ident(key), rep.schema[key].dataType,
+                     [r[0] for r in acts if r[0] is not None])
+    if pred is None:
+        return None
+    pre = V._bounded_collect(
+        rep.filter(F.expr(pred))
+        .select(F.col(group_col).alias("g"),
+                F.col(value_col).cast(_SUM_TYPE).alias("v")), bound)
+    if pre is None:
+        return None
+    # every touched key retracts its pre-batch contribution (an
+    # upsert replaces, a delete removes); every net insert adds its own
+    delta: dict = {}
+    for sign, rows in ((-1, pre),
+                       (1, [r for r in acts if r[1] == "insert"])):
+        for r in rows:
+            if r["g"] is None:
+                continue
+            d = delta.setdefault(r["g"], [0, decimal.Decimal(0)])
+            d[0] += sign
+            if r["v"] is not None:
+                d[1] += sign * r["v"]
+    cur: dict = {}
+    if delta and cur_df is not None:
+        gpred = V._sql_in("g", gtype, list(delta))
+        got = (None if gpred is None else V._bounded_collect(
+            cur_df.filter(F.expr(gpred)).select("g", "n", "sum_value"),
+            bound))
+        if got is None:
+            return None
+        cur = {r["g"]: r for r in got}
+        if len(cur) != len(got):
+            return None  # Spark's join would emit one row per copy
+    gs, ns, sums = [], [], []
+    for g, (dn, dv) in delta.items():
+        c = cur.get(g)
+        total = dv + ((c["sum_value"] or 0) if c else 0)
+        if abs(total) >= _SUM_LIMIT:
+            return None  # Spark's cast decides overflow
+        gs.append(g)
+        ns.append(((c["n"] or 0) if c else 0) + dn)
+        sums.append(total)
+    return spark.createDataFrame(pa.table({
+        "g": pa.array(gs, to_arrow_type(gtype)),
+        "n": pa.array(ns, pa.int64()),
+        "sum_value": pa.array(sums, pa.decimal128(18, 4)),
+    }))
+
+
+def _view_delta_spark(spark: SparkSession, net: DataFrame,
+                      replica: str, view: str, key: str,
+                      group_col: str, value_col: str) -> DataFrame:
+    """``_view_delta_local``'s rows planned in Spark, for batches past
+    its bounds: the touched keys' replica rows by broadcast left-semi,
+    the deltas grouped, a full-outer join with the view, and only the
+    changed groups kept."""
+    from mc_ns_data_pipeline_spark.sinks import versioned as V
+
+    meta = ("_change_type", "_commit_gen", "_rn")
+    ups = net.filter(F.col("_change_type") == "insert").drop(*meta)
+    pre = (V.read_current(spark, replica)
+           .join(F.broadcast(net.select(key)), key, "left_semi")
+           .select(F.col(group_col).alias("g"),
+                   F.lit(-1).alias("dn"),
+                   (-F.col(value_col)).alias("dv")))
+    add = ups.select(F.col(group_col).alias("g"),
+                     F.lit(1).alias("dn"),
+                     F.col(value_col).alias("dv"))
+    delta = (pre.unionByName(add)
+             .groupBy("g")
+             .agg(F.sum("dn").cast("long").alias("dn"),
+                  F.sum(F.col("dv").cast(_SUM_TYPE)).alias("dv")))
+    cur = (V.read_current(spark, view) if
+           V.current_snapshot(view) is not None else
+           spark.createDataFrame(
+               [], f"g {delta.schema['g'].dataType.simpleString()}"
+                   f", n long, sum_value {_SUM_TYPE}"))
+    zero = F.lit(0).cast(_SUM_TYPE)
+    return (delta.join(cur, "g", "full_outer")
+            .select(
+                "g",
+                (F.coalesce(F.col("n"), F.lit(0))
+                 + F.coalesce(F.col("dn"), F.lit(0)))
+                .cast("long").alias("n"),
+                (F.coalesce(F.col("sum_value"), zero)
+                 + F.coalesce(F.col("dv"), zero))
+                .cast(_SUM_TYPE).alias("sum_value"))
+            .join(F.broadcast(delta.select("g")), "g",
+                  "left_semi"))  # touch only changed groups
 
 
 def matview_minmax_batch(spark: SparkSession, batch_df: DataFrame,
@@ -1681,13 +1791,15 @@ def run_stream_matview(spark: SparkSession, source: str,
     bounds monotonically (see that function for the contract and
     the per-batch cost bound).
 
-    Scale: per batch this reads O(batch keys) replica rows (broadcast
-    left-semi; bloom/stat pruning applies), O(touched groups) view
-    rows, and rewrites nothing — but "O(batch keys)" is only a BOUND
-    when the feed is capped: set ``max_commits_per_trigger`` /
-    ``max_files_per_trigger`` so a consumer that fell a week behind
-    broadcasts the capped key set per batch, never the whole
-    backlog's. Admission, drain-to-completion, kill/resume, and
+    Scale: per batch this reads O(batch keys) replica rows and
+    O(touched groups) view rows, each through a literal IN filter,
+    computes the count/sum deltas on the driver and rewrites nothing
+    (matview_delta_batch; batches past ``_IN_LIST_MAX`` keys plan the
+    same delta in Spark with broadcast left-semis) — but "O(batch
+    keys)" is only a BOUND when the feed is capped: set
+    ``max_commits_per_trigger`` / ``max_files_per_trigger`` so a
+    consumer that fell a week behind collects the capped key set per
+    batch, never the whole backlog's. Admission, drain-to-completion, kill/resume, and
     ``on_batch`` semantics match ``run_stream_apply_changes``
     (capped availableNow runs loop until caught up —
     ``_drain_change_feed``)."""

@@ -7,7 +7,8 @@ Scenario: orders range-clustered into 64 files (stats on o_orderkey),
 then a streaming-upsert landing workload — successive scattered
 `merge_snapshot_mor` batches (each ~0.1% of the table, every file
 hit). After each commit we measure the warm full-read median: every
-pending delete file costs readers one more broadcast anti-join until
+pending delete file adds one more literal term to the readers' scan
+filter (one more broadcast anti-join past the driver budget) until
 compaction applies the masks. Then one compaction clears them and we
 measure the restored read and the compaction price.
 
@@ -24,6 +25,7 @@ Usage: python scripts/stress_mor_cadence.py [STRESS_DIR] [WORK_DIR] [N_BATCHES]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import time
@@ -47,7 +49,8 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     from mc_ns_data_pipeline_spark.sinks import versioned as V
 
     spark = (

@@ -9,6 +9,8 @@ falling back to the unchanged Spark path."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import os
 
 import pytest
@@ -227,3 +229,281 @@ def test_land_arrow_schema_parity_typed_keys(spark, tmp_path):
     b = spark.read.parquet(os.path.join(root, arrow_files[0]))
     assert a.schema == b.schema
     assert a.collect() == b.collect()
+
+
+# ---------------------------------------------------------------------------
+# Masked reads: within the budget every delete-key column is one literal
+# filter on the scan (``_mask_terms``); the broadcast anti-join
+# (``_mask_by_join``) is the fallback. Both must return the same rows.
+# ---------------------------------------------------------------------------
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _sorted(rows):
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+def _read_parity(spark, monkeypatch, read):
+    """``read()`` on the literal path and again with the budget at 0
+    (the anti-join fallback): asserts which path each took and returns
+    the one row list both produced."""
+    fast = read()
+    assert "Join" not in _plan(fast)
+    with monkeypatch.context() as m:
+        m.setattr(V, "_DRIVER_LAND_BYTES", 0)
+        slow = read()
+    assert "BroadcastHashJoin" in _plan(slow)
+    got = _sorted(fast.collect())
+    assert got == _sorted(slow.collect())
+    return got
+
+
+_TYPED_KEYS = {
+    "int": ("int", [1, 2, 3, 4, 5, -7]),
+    "string": ("string", ["a", "it's", "back\\slash", "ünï ✓", "",
+                          "x`y"]),
+    "date": ("date", [datetime.date(2031, 1, d) for d in (1, 2, 3, 4, 5)]
+             + [datetime.date(1, 1, 1)]),
+    "decimal": ("decimal(10,2)", [decimal.Decimal(x) for x in
+                                  ("1.50", "2.25", "-3.10", "0.00",
+                                   "99999999.99", "-0.01")]),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_TYPED_KEYS))
+def test_masked_read_literal_matches_join(spark, tmp_path, monkeypatch,
+                                          kind):
+    """Typed keys, NULL keys in the data and in the mask, a key that
+    is deleted and re-appended, and a MOR upsert whose own files tie
+    with its mask: the literal filter and the anti-join agree."""
+    typ, ks = _TYPED_KEYS[kind]
+    schema = f"k {typ}, v long"
+    t = str(tmp_path / "t")
+    V.write_snapshot(spark.createDataFrame(
+        [(k, i) for i, k in enumerate(ks)] + [(None, 100)], schema), t)
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(ks[0],), (ks[1],), (None,)], f"k {typ}"))
+    # the upsert's own files tie with its mask and must survive it
+    V.merge_snapshot_mor(spark, spark.createDataFrame(
+        [(ks[2], 200), (ks[3], 300)], schema), t, "k")
+    V.append_snapshot(spark.createDataFrame([(ks[0], 400)], schema), t)
+    assert len(V.read_manifest(t, V.current_snapshot(t))
+               ["delete_files"]) == 2
+
+    got = _read_parity(spark, monkeypatch,
+                       lambda: V.read_current(spark, t))
+    assert got == _sorted([(ks[0], 400), (ks[2], 200), (ks[3], 300),
+                           (ks[4], 4), (ks[5], 5), (None, 100)])
+
+
+def test_masked_read_legacy_manifest_matches_join(spark, tmp_path,
+                                                  monkeypatch):
+    """A manifest with no file_seq sequences every file as 0: the
+    masks apply to all of them on both paths."""
+    import json
+
+    t = str(tmp_path / "t")
+    snap = V.write_snapshot(spark.createDataFrame(
+        [(i, f"n{i}") for i in range(6)], "k long, name string"), t)
+    mp = os.path.join(t, "snapshots", f"{snap}.json")
+    with open(mp) as fh:
+        man = json.load(fh)
+    man.pop("file_seq", None)
+    with open(mp, "w") as fh:
+        json.dump(man, fh)
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(1,), (4,)], "k long"))
+    man = V.read_manifest(t, V.current_snapshot(t))
+    man.pop("file_seq", None)  # the read side of a legacy manifest
+    files = man["files"]
+
+    def read():
+        return V._apply_delete_files(
+            spark, t, V._read_pool(spark, t, files,
+                                   V._schema_from_man(man)), man, files)
+
+    assert [r[0] for r in _read_parity(spark, monkeypatch, read)] == \
+        [0, 2, 3, 5]
+
+
+def test_masked_read_renamed_key_matches_join(spark, tmp_path,
+                                              monkeypatch):
+    """After a metadata-only rename the scan is a coalesce projection
+    over both names; the mask's file term still resolves the scanned
+    file name through it."""
+    t = str(tmp_path / "t")
+    V.write_snapshot(spark.createDataFrame(
+        [(i, i * 10) for i in range(8)], "id long, v long"), t)
+    V.rename_column(t, "id", "k")
+    V.append_snapshot(spark.createDataFrame(
+        [(8, 80)], "k long, v long"), t)
+    V.merge_snapshot_mor(spark, spark.createDataFrame(
+        [(2, 21), (8, 81)], "k long, v long"), t, "k")
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(5,)], "k long"))
+
+    got = _read_parity(spark, monkeypatch,
+                       lambda: V.read_current(spark, t))
+    assert got == [(0, 0), (1, 10), (2, 21), (3, 30), (4, 40),
+                   (6, 60), (7, 70), (8, 81)]
+
+
+def test_masked_chunked_read_with_predicates_matches_join(
+        spark, tmp_path, monkeypatch):
+    """A chunked manifest read with predicates hands the mask only the
+    pruned files and their generations; both paths agree."""
+    monkeypatch.setattr(V, "_MANIFEST_CHUNK_FILES", 6)
+    monkeypatch.setattr(V, "_MANIFEST_CHUNK_SIZE", 4)
+    t = str(tmp_path / "t")
+    V.write_snapshot(
+        spark.createDataFrame([(i, i) for i in range(200)],
+                              "k int, v int").repartitionByRange(10, "k"),
+        t, stats_cols=["k"])
+    V.merge_snapshot_mor(spark, spark.createDataFrame(
+        [(7, -7), (150, -150)], "k int, v int"), t, "k")
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(8,), (151,)], "k int"))
+    assert "chunks" in V._read_core(t, V.current_snapshot(t))
+
+    got = _read_parity(spark, monkeypatch, lambda: V.read_current(
+        spark, t, predicates=[("k", "<", 20)]))
+    assert got == _sorted([(k, -7 if k == 7 else k) for k in range(20)
+                           if k != 8])
+
+
+def _mor_table(spark, tmp_path, typ="long"):
+    t = str(tmp_path / "m")
+    V.write_snapshot(spark.createDataFrame(
+        [(i, i) for i in range(6)], f"k {typ}, v long"), t)
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(2,)], f"k {typ}"))
+    return t
+
+
+@pytest.mark.parametrize("cause", ["over_budget", "too_many_keys",
+                                   "unreadable"])
+def test_masked_read_fallbacks_join(spark, tmp_path, monkeypatch, cause):
+    """Every exit from the literal path lands on the anti-join with
+    the same rows: delete files over the byte budget, more keys than
+    an IN list carries, and a delete file pyarrow cannot read."""
+    import pyarrow as pa
+
+    t = _mor_table(spark, tmp_path)
+    if cause == "over_budget":
+        monkeypatch.setattr(V, "_DRIVER_LAND_BYTES", 1)
+    elif cause == "too_many_keys":
+        monkeypatch.setattr(V, "_IN_LIST_MAX", 0)
+    else:
+        def unreadable(*a, **k):
+            raise pa.ArrowInvalid("not a parquet file")
+        monkeypatch.setattr(V, "_read_key_columns", unreadable)
+    df = V.read_current(spark, t)
+    assert "BroadcastHashJoin" in _plan(df)
+    assert sorted(r.k for r in df.collect()) == [0, 1, 3, 4, 5]
+
+
+@pytest.mark.parametrize("typ, keys", [
+    ("double", [2.0, -0.0]),
+    ("timestamp", [datetime.datetime(2031, 3, 1, 12)]),
+])
+def test_masked_read_inexact_key_types_join(spark, tmp_path, typ, keys):
+    """Keys whose Python literals are not exact (floats: NaN and -0.0;
+    timestamps: local-time folds) take the anti-join."""
+    t = str(tmp_path / "t")
+    rows = keys + ([0.0, 5.5] if typ == "double"
+                   else [datetime.datetime(2031, 3, 2)])
+    V.write_snapshot(spark.createDataFrame(
+        [(k, i) for i, k in enumerate(rows)], f"k {typ}, v long"), t)
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(keys[0],)], f"k {typ}"))
+    df = V.read_current(spark, t)
+    assert "BroadcastHashJoin" in _plan(df)
+    assert sorted(r.v for r in df.collect()) == list(
+        range(1, len(rows)))
+
+
+@pytest.mark.parametrize("typ, vals, want", [
+    ("tinyint", [1, 300, -129], "`k` IN (1Y)"),
+    ("decimal(4,2)", [decimal.Decimal("1.5"), decimal.Decimal("1.555"),
+                      decimal.Decimal("100")],
+     "`k` IN (CAST(1.50BD AS decimal(4,2)))"),
+    ("string", [], "false"),
+])
+def test_sql_in_drops_values_the_type_cannot_hold(typ, vals, want):
+    """A value no column value can equal (out of range, more scale
+    than the column) drops out of the list — exactly what equality
+    would decide; an empty list matches nothing."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    assert V._sql_in("`k`", _parse_datatype_string(typ), vals) == want
+
+
+def test_sql_in_refuses_foreign_values_and_long_lists(monkeypatch):
+    from pyspark.sql.types import LongType, StringType
+
+    assert V._sql_in("`k`", LongType(), ["1"]) is None
+    assert V._sql_in("`k`", StringType(), [1]) is None
+    monkeypatch.setattr(V, "_IN_LIST_MAX", 2)
+    assert V._sql_in("`k`", LongType(), [1, 2, 3]) is None
+
+
+def test_mor_live_match_count_is_literal(spark, tmp_path, monkeypatch):
+    """A MOR commit's live-row decrement filters by the batch's key
+    list, not a broadcast semi-join, and counts what the join counts."""
+    t = _mor_table(spark, tmp_path)
+    man = V.read_manifest(t, V.current_snapshot(t))
+    keys = spark.createDataFrame([(1,), (2,), (3,), (9,)], "k long")
+    seen = []
+    orig = V._key_semi
+
+    def spy(df, key, keys_df, vals):
+        out = orig(df, key, keys_df, vals)
+        seen.append("Join" in _plan(out))
+        return out
+
+    monkeypatch.setattr(V, "_key_semi", spy)
+    assert V._mor_matched(spark, t, man, "k", keys) == 2  # 2 is masked
+    assert V._mor_matched(spark, t, man, "k", keys, None) == 2
+    assert seen == [False, True]  # None: oversized batch, joined
+
+
+def test_masked_read_mixes_literal_and_joined_keys(spark, tmp_path):
+    """Two delete-key columns in one read: the long key's mask is a
+    literal filter, the double key's a sequenced anti-join whose file
+    names attach to the filtered scan."""
+    t = str(tmp_path / "t")
+    schema = "k long, f double, v long"
+    V.write_snapshot(spark.createDataFrame(
+        [(i, float(i), i) for i in range(6)], schema), t)
+    V.merge_snapshot_mor(spark, spark.createDataFrame(
+        [(2, 2.0, 20)], schema), t, "f")
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(4,)], "k long"))
+    df = V.read_current(spark, t)
+    plan = _plan(df)
+    assert plan.count("BroadcastHashJoin") == 2  # file map + f mask
+    assert "IN (4)" in plan or "= 4)" in plan
+    assert _sorted(df.collect()) == [
+        (0, 0.0, 0), (1, 1.0, 1), (2, 2.0, 20), (3, 3.0, 3),
+        (5, 5.0, 5)]
+
+
+def test_masked_read_with_a_metadata_data_column_joins(spark, tmp_path):
+    """A data column named ``_metadata`` hides the scan's metadata
+    struct from SQL text: the mask takes the anti-join, whose file
+    names come through ``metadataColumn``."""
+    t = str(tmp_path / "t")
+    schema = "k long, _metadata string"
+    V.write_snapshot(spark.createDataFrame(
+        [(i, f"m{i}") for i in range(5)], schema), t)
+    V.merge_snapshot_mor(spark, spark.createDataFrame(
+        [(1, "M1")], schema), t, "k")
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(3,)], "k long"))
+    df = V.read_current(spark, t)
+    assert "BroadcastHashJoin" in _plan(df)
+    assert _sorted(df.collect()) == [(0, "m0"), (1, "M1"), (2, "m2"),
+                                     (4, "m4")]

@@ -742,3 +742,33 @@ def test_q01_to_q16_builds_fire_no_spark_jobs(spark, sf_dir):
         if dag.nextJobId() != before:
             fired[name] = dag.nextJobId() - before
     assert not fired, f"plan builds fired Spark jobs: {fired}"
+
+
+def test_masked_count_is_one_scan_no_broadcast(spark, tmp_path):
+    """A versioned read with two pending merge-on-read masks (one a MOR
+    upsert's, which ties with its own files) counts in at most two
+    jobs, and its plan builds no driver RDD, no broadcast and no hash
+    shuffle: each mask is a literal filter on the scan."""
+    from mc_ns_data_pipeline_spark.sinks import versioned as V
+
+    t = str(tmp_path / "t")
+    V.write_snapshot(spark.createDataFrame(
+        [(i, i) for i in range(50)], "k long, v long"), t)
+    V.delete_keys_mor(spark, t, "k", spark.createDataFrame(
+        [(3,), (4,)], "k long"))
+    V.merge_snapshot_mor(spark, spark.createDataFrame(
+        [(5, -5), (60, 60)], "k long, v long"), t, "k")
+    assert len(V.read_manifest(t, V.current_snapshot(t))
+               ["delete_files"]) == 2
+
+    df = V.read_current(spark, t)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.groupBy().count().explain("formatted")
+    plan = buf.getvalue()
+    for op in ("ExistingRDD", "BroadcastExchange", "hashpartitioning"):
+        assert op not in plan, (op, plan)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    assert df.count() == 49
+    assert dag.nextJobId() - before <= 2

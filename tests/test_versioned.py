@@ -1133,12 +1133,14 @@ def test_vacuum_keeps_live_delete_files(spark, tmp_path):
     assert got == {(2, "b"), (3, "c")}
 
 
-def test_mor_read_plan_broadcasts_and_keeps_pushdown(spark, tmp_path):
-    """Plan pin for the delete-masked read: the mask is a BROADCAST
-    anti-join (the data side never shuffles for it), and a residual
-    predicate still reaches the parquet scan as a pushed filter — the
-    mask joins sit ABOVE the filtered scan, not between the filter and
-    the files."""
+def test_mor_read_plan_broadcasts_and_keeps_pushdown(spark, tmp_path,
+                                                    monkeypatch):
+    """Plan pin for the delete-masked read over the driver budget: the
+    mask is a BROADCAST anti-join (the data side never shuffles for
+    it), and a residual predicate still reaches the parquet scan as a
+    pushed filter — the mask joins sit ABOVE the filtered scan, not
+    between the filter and the files."""
+    monkeypatch.setattr(V, "_DRIVER_LAND_BYTES", 0)
     table = str(tmp_path / "t")
     V.write_snapshot(
         spark.createDataFrame([(i, i * 10) for i in range(100)],
@@ -1157,6 +1159,32 @@ def test_mor_read_plan_broadcasts_and_keeps_pushdown(spark, tmp_path):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan  # mask must not shuffle data
     assert "LessThanOrEqual(val,500)" in plan  # pushed to the scan
+
+
+def test_mor_read_plan_is_one_scan_filter_and_keeps_pushdown(spark,
+                                                             tmp_path):
+    """Within the driver budget the delete mask is a literal filter on
+    the scan: no join, no exchange, and the residual predicate still
+    reaches the parquet scan as a pushed filter."""
+    table = str(tmp_path / "t")
+    V.write_snapshot(
+        spark.createDataFrame([(i, i * 10) for i in range(100)],
+                              "k int, val int").repartition(4),
+        table, stats_cols=["k"])
+    V.delete_keys_mor(spark, table, "k",
+                      spark.createDataFrame([(3,)], "k int"))
+    df = V.read_current(spark, table, predicates=[("val", "<=", 500)])
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert "Join" not in plan and "Exchange" not in plan
+    assert "LessThanOrEqual(val,500)" in plan  # pushed to the scan
+    assert sorted(r.k for r in df.collect()) == [
+        k for k in range(51) if k != 3]
 
 
 def test_read_as_of_timestamp_time_travel(spark, tmp_path):
