@@ -42,32 +42,21 @@ Layout::
   applies and clears the masks). COW optimizes reads, MOR optimizes
   scattered deletes on huge tables — Iceberg v2's trade, selectable
   per call.
-* Writers commit OPTIMISTICALLY where rebasing is provably lossless:
-  ``append_snapshot``, ``compact_snapshot``, and (r6) the MOR pair
-  ``merge_snapshot_mor``/``delete_keys_mor`` do their expensive work
-  (landing files, stats/bloom scans, the rewrite, the decrement
-  count) with NO lease held and take the lease only for the metadata
-  publish — an append rebases onto whatever the head became (its
-  files are disjoint by construction); a compaction rebases over
-  interposed APPENDS and MOR commits and raises
-  ``CommitConflictError`` when a COW rewrite interposed (its inputs
-  are stale; landed files become vacuum orphans); a MOR commit
-  rebases over interposed appends (incremental decrement over just
-  their files) and over row-rewriting/masking commits (one recount
-  against the new head — the key-sequenced mask stays exact), and
-  conflicts only on a full refresh. COW merge/delete (r6) also stage
-  lease-free and rebase over interposed appends whose files PROVABLY
-  contain no batch key (manifest spans/blooms — `_cow_rebase_guard`),
-  conflicting on anything that could stale their located affected
-  set. Full refresh (r7) completes the matrix: ``write_snapshot``
-  stages lease-free too, but REBASING is impossible for an overwrite
-  — publishing over an interposed commit would silently orphan that
-  commit's data — so it conflicts on ANY head movement instead
-  (snapshot-isolation honesty: the caller re-reads and re-decides).
-  So a streaming lander, a streaming MOR upserter, a dimension
-  COW merge, and a maintenance OPTIMIZE all commit, no lost update;
-  every writer's lease hold is one metadata publish (the lease
-  heartbeat in sinks/lease still protects the rare long holds).
+* Writers commit OPTIMISTICALLY through ONE protocol (`_commit`):
+  every data verb — write, append, compact, COW merge/delete, MOR
+  merge/delete — stages with NO lease held (landing files, stats/bloom
+  scans, the rewrite, the decrement count), then takes the lease only
+  to re-check its replay stamp, rebase over the commits interposed
+  since staging by its row of one policy table (`_REBASE`: appends
+  rebase over anything, MOR commits over anything but a full refresh,
+  COW commits over provably key-disjoint appends, compaction over
+  appends and MOR commits, a full refresh over nothing) and publish
+  onto the head. A refused rebase raises ``CommitConflictError`` and
+  its staged files become vacuum orphans. So a streaming lander, a
+  streaming MOR upserter, a dimension COW merge, and a maintenance
+  OPTIMIZE all commit, no lost update; every writer's lease hold is
+  one metadata publish (the lease heartbeat in sinks/lease still
+  protects the rare long holds).
   ``vacuum_snapshots`` reference-counts pool files across retained
   manifests (data AND delete files) before deleting.
 * Crash safety: a crash before the flip leaves orphan pool files / an
@@ -85,6 +74,7 @@ sites keep the same shape.
 from __future__ import annotations
 
 import bisect
+import dataclasses
 import datetime as _dt
 import decimal
 import functools
@@ -497,36 +487,10 @@ def merge_ref(table: str, name: str, wait_s: float = 60.0) -> str:
             parent_schema = _schema_from_man(parent_core)
             schema = (_merge_schema(parent_schema, branch_schema)
                       if branch_schema is not None else parent_schema)
-            if "chunks" in parent_core:  # O(commit) chunk reuse
-                new_head = _publish(
-                    table, nf,
-                    parent_core.get("rows", 0) + delta_rows, new_head,
-                    _chunk_file_count(parent_core), op="append",
-                    new_files=nf, schema=schema,
-                    stats=nf_stats or None, blooms=nf_blooms or None,
-                    stats_cols=parent_core.get("stats_cols"),
-                    bloom_cols=parent_core.get("bloom_cols"),
-                    delete_files=parent_core.get("delete_files"),
-                    parent_chunks=parent_core["chunks"],
-                    parent_pages=parent_core.get("pages"),
-                    ref=staging)
-            else:
-                parent_man = _materialize(table, parent_core)
-                old_files = parent_man.get("files", [])
-                new_head = _publish(
-                    table, old_files + nf,
-                    parent_man.get("rows", 0) + delta_rows, new_head,
-                    len(old_files), op="append", new_files=nf,
-                    schema=schema,
-                    stats=_carry_stats(parent_man, old_files,
-                                       nf_stats or None),
-                    blooms=_carry_blooms(parent_man, old_files,
-                                         nf_blooms or None),
-                    stats_cols=parent_man.get("stats_cols"),
-                    bloom_cols=parent_man.get("bloom_cols"),
-                    file_seq=parent_man.get("file_seq"),
-                    delete_files=parent_man.get("delete_files"),
-                    ref=staging)
+            new_head = _publish_onto(table, new_head, parent_core, _Staged(
+                "append", new_head, parent_core, schema=schema,
+                files=nf, new_rows=delta_rows, stats=nf_stats or None,
+                blooms=nf_blooms or None), ref=staging)
         # the ONE externally-visible step: flip CURRENT to the fully-
         # replayed head, then consume the refs (post-flip crash leaves
         # only stale ref files, which the next merge/publish resets)
@@ -2426,19 +2390,28 @@ def _land_mask(spark: SparkSession, table: str, key: str,
     (``_driver_mask_keys``) pyarrow writes one file, no Spark job, and
     ``keys_df`` is a LocalTableScan. Every other exit takes the
     distributed path once, here: a Spark distinct, a ``coalesce(1)``
-    landing, the landed file read back."""
+    landing, the landed file read back. Only what the driver path
+    raises on a file or type it cannot handle is caught: ``OSError``
+    and ``pyarrow.ArrowException`` (an unreadable file, an arrow
+    mismatch) and ``PySparkTypeError`` (a type with no Arrow
+    conversion, from ``to_arrow_type`` or ``createDataFrame``); any
+    other error is a bug and propagates."""
+    import pyarrow as pa
+    from pyspark.errors import PySparkTypeError
+
+    driver_errors = (OSError, pa.ArrowException, PySparkTypeError)
     root = _data_root(table)
     paths = [os.path.join(root, f) for f in files]
     try:
         tbl = _driver_mask_keys(paths, key, df)
         del_files = (None if tbl is None
                      else _land_arrow_in_pool(tbl, table, spark))
-    except Exception:  # unreadable file, arrow mismatch: Spark path
+    except driver_errors:  # unreadable file, arrow mismatch: Spark path
         tbl = del_files = None
     if del_files is not None:
         try:
             return del_files, spark.createDataFrame(tbl), tbl.num_rows
-        except Exception:  # no local relation for this type: read back
+        except driver_errors:  # no local relation for the type: read back
             pass
     else:
         parts = [spark.read.parquet(*paths).select(key)] if paths else []
@@ -3060,23 +3033,9 @@ def set_partition_spec(table: str, spec: list[str] | None,
             parsed, core.get("stats_cols"), core.get("bloom_cols"))
         if bloom_cols and schema is not None:
             _check_bloom_cols(schema, bloom_cols)
-        common = dict(
-            op="set-spec", schema=schema,
-            stats_cols=stats_cols, bloom_cols=bloom_cols,
-            delete_files=core.get("delete_files"),
-            partition_spec=parsed,
-        )
-        if "chunks" in core:
-            return _publish(table, [], core["rows"], parent,
-                            _chunk_file_count(core), new_files=[],
-                            parent_chunks=core["chunks"],
-                            parent_pages=core.get("pages"), **common)
-        man = _materialize(table, core)
-        return _publish(table, man["files"], man["rows"], parent,
-                        len(man["files"]), new_files=[],
-                        stats=man.get("stats"),
-                        blooms=man.get("blooms"),
-                        file_seq=man.get("file_seq"), **common)
+        return _publish_onto(table, parent, core, _Staged(
+            "set-spec", parent, core, schema=schema,
+            stats_cols=stats_cols, bloom_cols=bloom_cols, spec=parsed))
 
 
 def _publish_schema_change(table: str, core: dict, parent: str,
@@ -3085,21 +3044,10 @@ def _publish_schema_change(table: str, core: dict, parent: str,
     """Metadata-only ``set-schema`` commit naming the parent's exact
     file set — the set_partition_spec publish shape. Caller holds the
     lease and has validated."""
-    common = dict(
-        op="set-schema", schema=schema, schema_meta=schema_meta,
-        stats_cols=stats_cols, bloom_cols=bloom_cols,
-        delete_files=core.get("delete_files"),
-    )
-    if "chunks" in core:
-        return _publish(table, [], core["rows"], parent,
-                        _chunk_file_count(core), new_files=[],
-                        parent_chunks=core["chunks"],
-                        parent_pages=core.get("pages"), **common)
-    man = _materialize(table, core)
-    return _publish(table, man["files"], man["rows"], parent,
-                    len(man["files"]), new_files=[],
-                    stats=man.get("stats"), blooms=man.get("blooms"),
-                    file_seq=man.get("file_seq"), **common)
+    return _publish_onto(table, parent, core, _Staged(
+        "set-schema", parent, core, schema=schema,
+        schema_meta=schema_meta, stats_cols=stats_cols,
+        bloom_cols=bloom_cols))
 
 
 def _schema_change_guard(table: str, core: dict, col: str) -> None:
@@ -3233,6 +3181,339 @@ def drop_column(table: str, col: str, wait_s: float = 60.0) -> str:
             keep(core.get("stats_cols")), keep(core.get("bloom_cols")))
 
 
+# ---------------------------------------------------------------------------
+# The commit protocol of the data verbs. Each verb stages with NO lease
+# held (lands its files and masks, scans their metadata, counts the
+# rows it removes) and hands one `_Staged` to `_commit`, the only
+# lease-held step: re-check the replay stamp, rebase over the commits
+# interposed since staging by the verb's rule, publish onto the head.
+# ---------------------------------------------------------------------------
+
+#: `_Staged` default for the stats/bloom opt-ins: the base's.
+_INHERIT = object()
+
+
+@dataclasses.dataclass(eq=False)
+class _Staged:
+    """One commit, staged against ``base`` (core manifest
+    ``base_core``; ``{}`` for an overwrite, which carries nothing). It
+    publishes the head's files minus ``removed`` plus ``files``, with
+    ``rows`` = head rows + ``new_rows`` - ``dropped``, and the head's
+    delete files minus ``applied`` plus ``masks``. ``incoming`` is the
+    batch schema, re-merged over a moved head (None: the head's
+    schema); ``key``/``keys_df``/``preds`` are the key batch the
+    rebase rules re-check."""
+    op: str
+    base: str | None
+    base_core: dict
+    schema: StructType | None = None
+    incoming: StructType | None = None
+    stats_cols: list | None = _INHERIT
+    bloom_cols: list | None = _INHERIT
+    files: list = dataclasses.field(default_factory=list)
+    frame_schema: StructType | None = None
+    new_rows: int = 0
+    stats: dict | None = None
+    blooms: dict | None = None
+    dropped: int = 0
+    masks: list = dataclasses.field(default_factory=list)
+    removed: set = dataclasses.field(default_factory=set)
+    applied: set = dataclasses.field(default_factory=set)
+    by_chunk: dict | None = None
+    file_seq: dict = dataclasses.field(default_factory=dict)
+    spec: list | None = None
+    schema_meta: dict | None = None
+    key: str | None = None
+    keys_df: DataFrame | None = None
+    preds: list | None = None
+
+    def __post_init__(self):
+        for name in ("stats_cols", "bloom_cols"):
+            if getattr(self, name) is _INHERIT:
+                setattr(self, name, self.base_core.get(name))
+
+
+def _land(spark: SparkSession, table: str, st: _Staged,
+          frame: DataFrame) -> _Staged:
+    """Land ``frame`` as ``st``'s files and scan their rows and stats
+    under its opt-ins — a cost bounded by the commit's own files."""
+    st.files = _land_in_pool(frame, table)
+    st.frame_schema = frame.schema
+    st.new_rows, st.stats = _scan_new_files(spark, table, st.files,
+                                            st.stats_cols)
+    return st
+
+
+def _stage(spark: SparkSession, table: str, st: _Staged,
+           frame: DataFrame) -> _Staged:
+    """`_land` plus the landed files' blooms: the lease-free half of
+    a commit."""
+    _land(spark, table, st, frame)
+    st.blooms = _scan_blooms(spark, table, st.files, st.bloom_cols,
+                             st.frame_schema)
+    return st
+
+
+def _conflict_on_any(spark, table, st, chain, core) -> None:
+    if chain:
+        raise CommitConflictError(
+            f"full refresh of {table} staged against "
+            f"{st.base or '<empty>'} but the head is now "
+            f"{chain[0]['snapshot']}: an overwrite would orphan the "
+            "interposed commits' data. Re-read the table and re-stage "
+            "if the refresh still applies (staged files are vacuum "
+            "orphans).")
+
+
+def _rebase_any(spark, table, st, chain, core) -> None:
+    """Appended files are disjoint from every commit's by
+    construction: nothing to re-check."""
+
+
+def _rebase_mor(spark, table, st, chain, core) -> None:
+    """Re-count a MOR commit's live matches over the interposed
+    chain: appends only add their own files' matches (they postdate
+    every pending mask, so a raw count is the live count); anything
+    that rewrote or masked rows stales the count both ways, so it is
+    recounted against the head."""
+    ops = {m.get("op") for m in chain}
+    if "overwrite" in ops:
+        raise CommitConflictError(
+            f"{table}: a full refresh interposed while this MOR "
+            f"commit was staging — re-run against the new table")
+    if not ops <= {"append"}:
+        st.dropped = _mor_matched(spark, table, core, st.key, st.keys_df)
+        return
+    appended = [f for m in chain for f in (m.get("new_files") or [])]
+    if appended:
+        st.dropped += _key_semi(
+            _read_pool(spark, table, appended, _schema_from_man(core),
+                       renames=core.get("renames")).select(st.key),
+            st.key, st.keys_df,
+            _bounded_key_vals(st.key, st.keys_df)).count()
+
+
+def _rebase_cow(spark, table, st, chain, core) -> None:
+    """A COW rewrite may publish onto a moved head only if every
+    interposed commit is an append (or set-spec) whose files PROVABLY
+    hold no batch key, decided from their recorded spans and blooms
+    (O(interposed commits), never a data scan). Then the affected set
+    located at base is still exactly the head's files holding a batch
+    key, no interposed mask exists that the rewritten files would
+    escape, and the base-counted affected rows are still live."""
+    bad = [m["snapshot"] for m in chain
+           if m.get("op") not in ("append", "set-spec")]
+    if bad:
+        raise CommitConflictError(
+            f"{table}: non-append commits {bad} interposed while this "
+            "COW rewrite ran — its inputs are stale; re-run against "
+            "the current head")
+    files: list[str] = []
+    stats: dict = {}
+    blooms: dict = {}
+    for m, pm in zip(chain, chain[1:] + [st.base_core]):
+        new = m.get("new_files") or []
+        if not new:
+            continue
+        files += new
+        if "chunks" not in m:
+            stats.update({f: v for f, v in
+                          (m.get("stats") or {}).items() if f in new})
+            blooms.update({f: v for f, v in
+                           (m.get("blooms") or {}).items() if f in new})
+            continue
+        # a chunked append's own sidecars = descriptors not in its
+        # parent. In an append-only chain descriptors only move tail
+        # -> page (folds), never out of a page, so the parent's TAIL
+        # ids suffice: pages shared by ref are skipped wholesale, and
+        # a fold's new page is walked for the moved-in descs it may
+        # carry alongside fresh ones.
+        parent_ids = {ch["id"] for ch in pm.get("chunks") or []}
+        pm_pages = {pg["id"] for pg in pm.get("pages") or []}
+        cand = list(m.get("chunks") or [])
+        for pg in m.get("pages") or []:
+            if pg["id"] not in pm_pages:
+                cand += _read_page(table, pg["id"])
+        for ch in cand:
+            if ch["id"] not in parent_ids:
+                side = _read_chunk(table, ch["id"])
+                stats.update(side.get("stats") or {})
+                blooms.update(side.get("blooms") or {})
+    sub = {"files": files, "stats": stats, "blooms": blooms,
+           "stats_cols": st.base_core.get("stats_cols"),
+           "bloom_cols": st.base_core.get("bloom_cols")}
+    kept = _prune_from_man(sub, st.preds)["kept"] if files else []
+    if kept:
+        raise CommitConflictError(
+            f"{table}: interposed appends may contain this batch's "
+            f"keys ({len(kept)} file(s) not ruled out by spans/blooms) "
+            "— the located affected set is stale; re-run against the "
+            "current head")
+
+
+def _rebase_compact(spark, table, st, chain, core) -> None:
+    """Interposed appends and MOR commits hold files disjoint from the
+    rewrite's inputs; they ride along with their recorded generations.
+    The rewrite applied the base's masks, so those drop. The
+    compacted files are stamped at the BASE generation, so a mask
+    published mid-compaction (seq above base) keeps masking the rows
+    they still carry, while the interposed commits' own files stay
+    exempt from their own masks (strict-below sequencing)."""
+    bad = [m["snapshot"] for m in chain
+           if m.get("op") not in ("append", "delete-mor", "merge-mor",
+                                  "set-spec")]
+    if bad:
+        raise CommitConflictError(
+            f"{table}: commits {bad} interposed while compacting "
+            "rewrote files this rewrite read as inputs — re-run "
+            "compaction against the current head")
+    if not st.applied <= {d["file"] for d in core.get("delete_files")
+                          or []}:
+        raise CommitConflictError(  # a mask vanished mid-chain
+            f"{table}: delete masks changed non-additively under "
+            "the interposed chain — re-run compaction")
+    if chain:
+        st.file_seq = {f: _gen_of(st.base) for f in st.files}
+    # every base-era file is rewritten under CURRENT column names, so
+    # the rename projection chain and the retired-name fence clear,
+    # like a full refresh (restoring pushdown on renamed columns)
+    st.schema_meta = {"field_ids": core.get("field_ids"),
+                      "next_field_id": core.get("next_field_id"),
+                      "renames": None, "retired": None}
+
+
+#: The rebase policy of `_commit`, keyed by the commit's op.
+_REBASE = {
+    "overwrite": _conflict_on_any,
+    "append": _rebase_any,
+    "merge-mor": _rebase_mor,
+    "delete-mor": _rebase_mor,
+    "merge": _rebase_cow,
+    "delete": _rebase_cow,
+    "compact": _rebase_compact,
+}
+
+
+def _commit(spark: SparkSession, table: str, st: _Staged, owner: str,
+            txn_id: str | None = None, branch: str | None = None) -> str:
+    """Publish ``st``, staged lease-free against ``st.base``: the one
+    lease-held step of every data verb. It takes the table lease
+    (queueing up to `_COMMIT_WAIT_S` — publishes are milliseconds);
+    returns the snapshot already stamped with ``txn_id`` on the head
+    (CURRENT, or ``branch``'s head), if any; walks the chain
+    interposed since ``st.base`` once (`_rebase_chain`) if the head
+    moved and applies the op's rule from `_REBASE`; and publishes onto
+    the head (`_publish_onto`). A rebased commit also re-merges its
+    batch schema over the head's and re-scans its files' stats and
+    blooms if the head's opt-ins differ. The rules:
+
+    ============  ====================================================
+    op            rebases over
+    ============  ====================================================
+    overwrite     nothing: a refresh published over an interposed
+                  commit would orphan that commit's data
+    append        anything: its files are disjoint by construction
+    merge-mor,    anything but an overwrite: an append costs one
+    delete-mor    count over just its files; anything that rewrote or
+                  masked rows, one recount against the head (the key
+                  mask, sequenced at the publish, stays exact)
+    merge,        appends and set-spec commits whose files provably
+    delete (COW)  hold no batch key, from manifest spans and blooms
+    compact       appends, MOR commits and set-spec commits whose
+                  masks were only added; the rewrite is stamped at
+                  the base generation
+    ============  ====================================================
+
+    Anything else raises ``CommitConflictError``: the caller re-runs
+    against the new head, and the staged files, like those of a lost
+    replay race, are vacuum orphans."""
+    with table_lease(table, owner=owner, wait_s=_COMMIT_WAIT_S):
+        applied = _txn_already_applied(table, txn_id, branch)
+        if applied is not None:
+            return applied
+        head = _branch_head(table, branch)
+        core, chain = st.base_core, []
+        if head != st.base:
+            core = _read_core(table, head)
+            chain = _rebase_chain(table, head, st.base)
+        _REBASE[st.op](spark, table, st, chain, core)
+        if chain:
+            st.schema = (_schema_from_man(core) if st.incoming is None
+                         else _merge_schema(_schema_from_man(core),
+                                            st.incoming,
+                                            core.get("retired")))
+            # a mask-only commit has no files to re-scan
+            if sorted(core.get("stats_cols") or []) != sorted(
+                    st.stats_cols or []):
+                st.stats_cols = core.get("stats_cols")
+                if st.files:
+                    st.stats = _scan_new_files(spark, table, st.files,
+                                               st.stats_cols)[1]
+            if sorted(core.get("bloom_cols") or []) != sorted(
+                    st.bloom_cols or []):
+                st.bloom_cols = core.get("bloom_cols")
+                if st.files:
+                    st.blooms = _scan_blooms(spark, table, st.files,
+                                             st.bloom_cols,
+                                             st.frame_schema)
+        return _publish_onto(table, head, core, st, txn_id, branch)
+
+
+def _publish_onto(table: str, parent: str | None, core: dict,
+                  st: _Staged, txn_id: str | None = None,
+                  ref: str | None = None) -> str:
+    """Publish ``st`` onto ``parent`` (core manifest ``core``) — the
+    one place a commit chooses its manifest shape. A chunked core is
+    reused by descriptor: untouched sidecars by id, ``st.removed``
+    members tombstoned (`_tombstoned_core`), this commit's files as
+    new sidecars — O(commit) metadata. An inline core, or a chunked
+    one whose removed files were located without a chunk map, is
+    materialized: its kept files carry their stats, blooms and
+    ``file_seq``, and `_publish` re-chunks a list past
+    `_MANIFEST_CHUNK_FILES`. Caller holds the table lease."""
+    dels = [d for d in core.get("delete_files") or []
+            if d["file"] not in st.applied] + st.masks
+    rows = core.get("rows", 0) + st.new_rows - st.dropped
+    common = dict(txn_id=txn_id, op=st.op, new_files=st.files,
+                  schema=st.schema, stats_cols=st.stats_cols,
+                  bloom_cols=st.bloom_cols, delete_files=dels or None,
+                  ref=ref, partition_spec=st.spec,
+                  schema_meta=st.schema_meta)
+    if "chunks" in core and (st.by_chunk is not None or not st.removed):
+        pages, descs = (
+            _tombstoned_core(table, core, st.by_chunk, st.removed)
+            if st.removed else (core.get("pages"), core["chunks"]))
+        return _publish(
+            table, st.files, rows, parent,
+            _chunk_file_count({"pages": pages, "chunks": descs}),
+            stats=st.stats, blooms=st.blooms, parent_chunks=descs,
+            parent_pages=pages, **common)
+    man = core if "files" in core else _materialize(table, core)
+    kept = [f for f in man.get("files") or [] if f not in st.removed]
+    return _publish(
+        table, kept + st.files, rows, parent, len(kept),
+        stats=_carry_stats(man, kept, st.stats),
+        blooms=_carry_blooms(man, kept, st.blooms),
+        file_seq={**(man.get("file_seq") or {}), **st.file_seq},
+        **common)
+
+
+def _first_commit(spark: SparkSession, updates: DataFrame, table: str,
+                  owner: str, txn_id: str | None,
+                  branch: str | None = None) -> str | None:
+    """A merge's commit onto a table with no snapshot yet: cheap, so
+    it stays pessimistic — land and publish ``updates`` under the
+    lease. None when another writer created the table first; the
+    caller then merges against it."""
+    with table_lease(table, owner=owner, wait_s=_COMMIT_WAIT_S):
+        if _branch_head(table, branch) is not None:
+            return None
+        st = _stage(spark, table, _Staged("merge", None, {},
+                                          schema=updates.schema),
+                    updates)
+        return _publish_onto(table, None, {}, st, txn_id, branch)
+
+
 def write_snapshot(df: DataFrame, table: str,
                    stats_cols: list[str] | None = None,
                    bloom_cols: list[str] | None = None,
@@ -3258,19 +3539,8 @@ def write_snapshot(df: DataFrame, table: str,
     writers never call sinks/layout, pruning just works. A full
     refresh REDEFINES the spec (omit to drop it).
 
-    OPTIMISTIC commit, conflict-on-anything (r7): the landing and the
-    stats/bloom scans run with NO lease held; the lease wraps only the
-    metadata publish. Unlike every other verb, a refresh cannot REBASE
-    over a moved head — its semantics are "the table now equals this
-    df as of the state the caller saw", and an overwrite published
-    over interposed commits would silently ORPHAN their data (the
-    lost-update class rebasing exists to prevent). So if CURRENT moved
-    between staging start and publish, this raises
-    ``CommitConflictError`` and the staged files become vacuum
-    orphans; the caller re-reads the table state and decides whether
-    the refresh still applies. This is snapshot-isolation honesty, not
-    a missing feature — a refresh that auto-retried over an interposed
-    append would destroy that append's rows by design."""
+    Commits through `_commit`, row ``overwrite``: it conflicts on any
+    interposed commit; the caller re-reads and re-decides."""
     os.makedirs(table, exist_ok=True)
     spec = (_parse_partition_spec(partition_spec)
             if partition_spec else None)
@@ -3296,46 +3566,29 @@ def write_snapshot(df: DataFrame, table: str,
     if bloom_cols:
         _check_bloom_cols(df.schema, bloom_cols)
     base = current_snapshot(table)  # the state this refresh replaces
-    if txn_id is not None:
-        applied = _txn_already_applied(table, txn_id)
-        if applied is not None:
-            return applied
-    # stage lease-free: land + scan are the expensive part
-    files = _land_in_pool(df, table)
-    rows, stats = _scan_new_files(df.sparkSession, table, files,
-                                  stats_cols)
-    blooms = _scan_blooms(df.sparkSession, table, files,
-                          bloom_cols, df.schema)
-    with table_lease(table, owner="write_snapshot"):
-        if txn_id is not None:
-            applied = _txn_already_applied(table, txn_id)
-            if applied is not None:
-                return applied  # replay raced us in; files = orphans
-        head = current_snapshot(table)
-        if head != base:
-            raise CommitConflictError(
-                f"full refresh of {table} staged against "
-                f"{base or '<empty>'} but CURRENT is now {head}: an "
-                f"overwrite would orphan the interposed commits' data."
-                f" Re-read the table and re-stage if the refresh "
-                f"still applies (staged files are vacuum orphans).")
-        return _publish(table, files, rows, head, 0,
-                        txn_id=txn_id,
-                        op="overwrite", schema=df.schema, stats=stats,
-                        stats_cols=stats_cols, blooms=blooms,
-                        bloom_cols=bloom_cols, partition_spec=spec)
+    applied = _txn_already_applied(table, txn_id)
+    if applied is not None:
+        return applied
+    spark = df.sparkSession
+    st = _Staged("overwrite", base, {}, schema=df.schema,
+                 stats_cols=stats_cols, bloom_cols=bloom_cols, spec=spec)
+    return _commit(spark, table, _stage(spark, table, st, df),
+                   "write_snapshot", txn_id)
 
 
-def _txn_already_applied(table: str, txn_id: str,
-                         start: str | None = None) -> str | None:
-    """Walk the manifest parent chain from ``start`` (default:
-    CURRENT — pass a branch head when staging) looking for a commit
-    stamped with `txn_id`; returns that snapshot's name, or None. The
-    walk stops at a vacuumed-away parent — retention (vacuum `keep`)
-    must therefore cover the longest plausible replay gap, which for
-    streaming retries (the next micro-batch after a crash) is one
-    commit."""
-    snap = start if start is not None else current_snapshot(table)
+def _txn_already_applied(table: str, txn_id: str | None,
+                         branch: str | None = None) -> str | None:
+    """The snapshot already stamped with ``txn_id`` on the commit's ref
+    (CURRENT, or ``branch``'s head), or None — by walking the manifest
+    parent chain from that head. Verbs call it before staging, so a
+    replayed batch skips the work, and `_commit` re-checks under the
+    lease. The walk stops at a vacuumed-away parent — retention
+    (vacuum `keep`) must therefore cover the longest plausible replay
+    gap, which for streaming retries (the next micro-batch after a
+    crash) is one commit."""
+    if txn_id is None:
+        return None
+    snap = _branch_head(table, branch)
     while snap is not None:
         try:
             man = _read_core(table, snap)
@@ -3364,21 +3617,12 @@ def append_snapshot(df: DataFrame, table: str,
     crashed BEFORE its pointer flip left only unreferenced pool files
     (vacuum reaps them) and the replay commits normally.
 
-    OPTIMISTIC commit: the expensive work (landing files, scanning
-    stats/blooms) runs with NO lease held; only the metadata publish
-    takes the lease, briefly. An append's files are disjoint from
-    every concurrent commit by construction, so if the head moved
-    while this writer was landing, the publish simply REBASES onto the
-    new head — appended files plus whatever the head now is. Two
-    appends, or an append racing a compaction/merge, therefore BOTH
-    commit with no lost update (the multi-writer contract; hammer-
-    tested in tests/test_versioned_concurrency.py).
-
+    Commits through `_commit`, row ``append``: it rebases onto any
+    head, so two appends, or an append racing a compaction or merge,
+    both commit (hammer-tested in tests/test_versioned_concurrency.py).
     On a CHUNKED table (manifests past `_MANIFEST_CHUNK_FILES`) the
-    append never touches the parent's per-file metadata at all: it
-    writes one new sidecar for its own files and the core manifest
-    reuses the parent's chunk descriptors — commit metadata stays
-    O(commit) at any table size.
+    append writes one new sidecar for its own files and reuses the
+    parent's chunk descriptors — commit metadata stays O(commit).
 
     ``branch`` stages the commit on a NAMED REF instead of CURRENT
     (write-audit-publish): the first staged commit forks from CURRENT,
@@ -3387,78 +3631,16 @@ def append_snapshot(df: DataFrame, table: str,
     discarded branch (``delete_ref``) leaves only vacuum orphans."""
     os.makedirs(table, exist_ok=True)
     spark = df.sparkSession
-
-    _head = functools.partial(_branch_head, table, branch)
-
-    if txn_id is not None:  # cheap pre-check: a replayed batch skips
-        applied = _txn_already_applied(table, txn_id,  # the landing
-                                       start=_head())
-        if applied is not None:
-            return applied
-    base = _head()
-    base_man = _read_core(table, base) if base else {}
-    stats_cols = base_man.get("stats_cols")
-    bloom_cols = base_man.get("bloom_cols")
-    _merge_schema(_schema_from_man(base_man), df.schema,
-                  base_man.get("retired"))  # fail early
-    new_files = _land_in_pool(
-        _cluster_to_spec(df, base_man.get("partition_spec")), table)
-    new_rows, new_stats = _scan_new_files(spark, table, new_files,
-                                          stats_cols)
-    new_blooms = _scan_blooms(spark, table, new_files, bloom_cols,
-                              df.schema)
-    with table_lease(table, owner="append_snapshot",
-                     wait_s=_COMMIT_WAIT_S):
-        if txn_id is not None:  # decisive re-check under the lease:
-            applied = _txn_already_applied(table, txn_id,
-                                           start=_head())
-            if applied is not None:  # lost a replay race after landing
-                return applied  # — this attempt's files are orphans
-        parent = _head()
-        parent_core = (base_man if parent == base
-                       else _read_core(table, parent) if parent
-                       else {})
-        if parent != base:  # rebase onto the moved head: stat/bloom
-            # opt-in can only have changed via a full write_snapshot,
-            # so recompute this batch's metadata iff the columns moved
-            if sorted(parent_core.get("stats_cols") or []) != sorted(
-                    stats_cols or []):
-                stats_cols = parent_core.get("stats_cols")
-                _, new_stats = _scan_new_files(spark, table, new_files,
-                                               stats_cols)
-            if sorted(parent_core.get("bloom_cols") or []) != sorted(
-                    bloom_cols or []):
-                bloom_cols = parent_core.get("bloom_cols")
-                new_blooms = _scan_blooms(spark, table, new_files,
-                                          bloom_cols, df.schema)
-        schema = _merge_schema(_schema_from_man(parent_core), df.schema,
-                               parent_core.get("retired"))
-        if "chunks" in parent_core:  # O(commit): reuse parent chunks
-            return _publish(
-                table, new_files,
-                parent_core.get("rows", 0) + new_rows, parent,
-                _chunk_file_count(parent_core), txn_id=txn_id,
-                op="append", new_files=new_files, schema=schema,
-                stats=new_stats, stats_cols=stats_cols,
-                blooms=new_blooms, bloom_cols=bloom_cols,
-                delete_files=parent_core.get("delete_files"),
-                parent_chunks=parent_core["chunks"],
-                parent_pages=parent_core.get("pages"), ref=branch)
-        parent_man = _materialize(table, parent_core)
-        old_files = parent_man.get("files", [])
-        return _publish(table, old_files + new_files,
-                        parent_man.get("rows", 0) + new_rows, parent,
-                        len(old_files), txn_id=txn_id, op="append",
-                        new_files=new_files, schema=schema,
-                        stats=_carry_stats(parent_man, old_files,
-                                           new_stats),
-                        stats_cols=stats_cols,
-                        blooms=_carry_blooms(parent_man, old_files,
-                                             new_blooms),
-                        bloom_cols=bloom_cols,
-                        file_seq=parent_man.get("file_seq"),
-                        delete_files=parent_man.get("delete_files"),
-                        ref=branch)
+    applied = _txn_already_applied(table, txn_id, branch)
+    if applied is not None:  # a replayed batch skips the landing
+        return applied
+    base = _branch_head(table, branch)
+    core = _read_core(table, base) if base else {}
+    st = _Staged("append", base, core, incoming=df.schema,
+                 schema=_merge_schema(_schema_from_man(core), df.schema,
+                                      core.get("retired")))  # fail early
+    _stage(spark, table, st, _cluster_to_spec(df, core.get("partition_spec")))
+    return _commit(spark, table, st, "append_snapshot", txn_id, branch)
 
 
 def compact_snapshot(spark: SparkSession, table: str,
@@ -3479,23 +3661,9 @@ def compact_snapshot(spark: SparkSession, table: str,
     (vacuum reaps them with the superseded manifests). ``rows`` is
     already net of MOR decrements — no recount needed.
 
-    OPTIMISTIC commit: the rewrite — the minutes-long part on a big
-    table — runs with NO lease held, against the snapshot current when
-    compaction started. If the head moved before the publish, the
-    commit REBASES over interposed APPENDS and MERGE-ON-READ commits
-    (delete-mor / merge-mor): interposed files are disjoint from the
-    rewrite's inputs and ride along with their recorded generations;
-    base-era masks were applied into the rewrite and drop; masks
-    published MID-compaction keep masking the compacted rows because
-    the compacted files are stamped at the BASE generation (strict-
-    below sequencing does the rest — see the in-body comment). Only an
-    interposed COW commit (merge / delete / overwrite / another
-    compact) — which rewrote files this rewrite read as inputs —
-    raises ``CommitConflictError``; the caller re-runs against the new
-    head and the landed files are vacuum orphans. This is the
-    streaming-lander-plus-maintenance shape: append or MOR-upsert
-    landers keep flowing while OPTIMIZE compacts, and ALL of them
-    commit."""
+    Commits through `_commit`, row ``compact``: append or MOR-upsert
+    landers keep committing while it rewrites, and an interposed COW
+    commit (which rewrote its inputs) conflicts."""
     base = current_snapshot(table)
     if base is None:
         raise NoCurrentSnapshotError(table)
@@ -3514,85 +3682,13 @@ def compact_snapshot(spark: SparkSession, table: str,
         cur = _cluster_to_spec(cur, spec, n_partitions=target_files)
     else:
         cur = cur.coalesce(target_files)
-    stats_cols = base_man.get("stats_cols")
-    bloom_cols = base_man.get("bloom_cols")
-    files = _land_in_pool(cur, table)
-    if stats_cols:
-        _, stats = _scan_new_files(spark, table, files, stats_cols)
-    else:  # row count already known: no discarded full-table scan
-        stats = None
-    blooms = _scan_blooms(spark, table, files, bloom_cols, cur.schema)
-    with table_lease(table, owner="compact_snapshot",
-                     wait_s=_COMMIT_WAIT_S):
-        head = current_snapshot(table)
-        # A compaction rewrites every base-era file under CURRENT
-        # column names (interposed appends already wrote current
-        # names), so the rename projection chain and the retired-name
-        # fence clear — exactly like a full refresh. This also
-        # restores parquet filter pushdown on renamed columns (the
-        # coalesce chain is only needed while old-name files live).
-        meta_clear = {"field_ids": base_man.get("field_ids"),
-                      "next_field_id": base_man.get("next_field_id"),
-                      "renames": None, "retired": None}
-        if head == base:
-            return _publish(table, files, base_man["rows"], head, 0,
-                            op="compact", schema=cur.schema,
-                            stats=stats, stats_cols=stats_cols,
-                            blooms=blooms, bloom_cols=bloom_cols,
-                            schema_meta=meta_clear)
-        head_man = read_manifest(table, head)
-        interposed = _rebase_chain(table, head, base)
-        bad = [m["snapshot"] for m in interposed
-               if m.get("op") not in ("append", "delete-mor",
-                                      "merge-mor", "set-spec")]
-        if bad:
-            raise CommitConflictError(
-                f"{table}: commits {bad} interposed while compacting "
-                "rewrote files this rewrite read as inputs — re-run "
-                "compaction against the current head")
-        # Base-era masks were APPLIED into the rewrite and drop;
-        # masks published mid-compaction must keep masking the rows
-        # the compacted output still carries. Stamping the compacted
-        # files at the BASE generation (not this commit's) makes the
-        # strict-below rule do exactly that: an interposed delete's
-        # seq is above base, so it masks the compacted rows, while
-        # the interposed commit's own files keep their recorded seqs
-        # and stay exempt from their own masks.
-        base_dels = base_man.get("delete_files") or []
-        head_dels = head_man.get("delete_files") or []
-        base_del_ids = {d["file"] for d in base_dels}
-        if not base_del_ids <= {d["file"] for d in head_dels}:
-            raise CommitConflictError(  # a mask vanished mid-chain:
-                f"{table}: delete masks changed non-additively under "
-                "the interposed chain — re-run compaction")
-        new_dels = [d for d in head_dels
-                    if d["file"] not in base_del_ids]
-        base_gen = _gen_of(base)
-        base_set = set(base_man["files"])
-        inter_files = [f for f in head_man["files"]
-                       if f not in base_set]
-        head_stats = head_man.get("stats") or {}
-        head_blooms = head_man.get("blooms") or {}
-        head_seq = head_man.get("file_seq") or {}
-        return _publish(
-            table, files + inter_files, head_man["rows"], head,
-            len(inter_files), op="compact", schema_meta={
-                **meta_clear,
-                "field_ids": head_man.get("field_ids"),
-                "next_field_id": head_man.get("next_field_id")},
-            new_files=files, schema=_schema_from_man(head_man),
-            stats=(None if stats is None else {
-                **stats, **{f: head_stats[f] for f in inter_files
-                            if f in head_stats}}),
-            stats_cols=head_man.get("stats_cols"),
-            blooms=(None if blooms is None else {
-                **blooms, **{f: head_blooms[f] for f in inter_files
-                             if f in head_blooms}}),
-            bloom_cols=head_man.get("bloom_cols"),
-            file_seq={**{f: base_gen for f in files},
-                      **{f: head_seq[f] for f in inter_files
-                         if f in head_seq}},
-            delete_files=new_dels or None)
+    st = _stage(spark, table, _Staged(
+        "compact", base, base_man, schema=cur.schema,
+        removed=set(base_man["files"]),
+        applied={d["file"] for d in base_man.get("delete_files") or []}),
+        cur)
+    st.new_rows = 0  # the rewrite holds exactly the base's live rows
+    return _commit(spark, table, st, "compact_snapshot")
 
 
 _BLOOM_PROBE_MAX_KEYS = 100_000  # bounded driver collect for probing
@@ -3667,33 +3763,6 @@ def _stat_candidates(man: dict, key: str, keys_df: DataFrame,
     if files and has_blooms and vals is not None:
         files = _bloom_candidates(man, key, vals, files)
     return files
-
-
-def _locate_affected(spark: SparkSession, table: str, man: dict,
-                     key: str, keys_df: DataFrame
-                     ) -> tuple[list[str], list[str]]:
-    """Which of the parent manifest's files contain one of `keys_df`'s
-    keys — a key-column + input_file_name scan semi-joined against the
-    broadcast key set (column-pruned; footer stats prune clustered
-    layouts before rows are read). When the manifest carries stats
-    for `key`, files whose [min, max] lies outside the batch's key
-    range are excluded from the scan by METADATA alone — on a
-    clustered 100 TB table the locate step then opens only the files
-    a localized update batch can possibly hit. The scan runs under the
-    manifest schema so pre-evolution files (which may lack `key`
-    entirely) project NULL instead of breaking inference. Returns
-    (affected absolute paths, untouched pool-relative names)."""
-    old_files = man["files"]
-    root = _data_root(table)
-    candidates = _stat_candidates(man, key, keys_df)
-    if not candidates:
-        return [], list(old_files)
-    affected = _affected_scan(spark, table, candidates, key, keys_df,
-                              _schema_from_man(man),
-                              renames=man.get("renames"))
-    untouched = [f for f in old_files if f not in affected]
-    return ([os.path.join(root, f) for f in sorted(affected)],
-            untouched)
 
 
 def _affected_scan(spark: SparkSession, table: str,
@@ -3789,177 +3858,67 @@ def _tombstoned_core(table: str, core: dict, by_chunk: dict,
     return pages, tail
 
 
-def _cow_rebase_guard(table: str, head: str, base: str,
-                      base_core: dict, key: str,
-                      preds: list[tuple]) -> None:
-    """Validate that an optimistic COW rewrite staged against ``base``
-    may publish onto the moved ``head``: every interposed commit must
-    be an APPEND whose files PROVABLY contain no batch key — decided
-    from manifest metadata alone (the appended files' recorded spans
-    and blooms; O(interposed commits), never a data scan).
+def _cow_commit(spark: SparkSession, table: str, op: str, base: str,
+                core: dict, key: str, keys_df: DataFrame, rewrite,
+                owner: str, txn_id: str | None = None,
+                incoming: StructType | None = None) -> str:
+    """Stage and commit a copy-on-write rewrite (merge, key delete) of
+    the files holding a ``keys_df`` key. The batch's span/bloom
+    predicates cut the candidates from metadata (on a chunked core,
+    loading only the sidecars they can hit), a key-column scan finds
+    the affected files, and ``rewrite(affected_df)`` returns the rows
+    replacing their live rows (``affected_df`` None: no file holds a
+    key; a None result publishes nothing). ``rewrite``'s output MUST
+    derive from the ``affected_df`` it receives: the affected-row
+    count is an Observation on that frame collected by the landing
+    write (`_observed_count`), so a plan built from anything else
+    would block the commit on ``obs.get`` instead of failing loudly.
 
-    Sound because then (a) the affected set located at base is still
-    exactly the head's files holding a batch key, (b) no interposed
-    mask exists that the freshly-stamped rewritten files would escape,
-    and (c) the base-counted affected rows are still live at head.
-    Anything else — a key-overlapping (or metadata-less) append, any
-    MOR commit, a COW rewrite, a full refresh — raises
-    ``CommitConflictError``; the caller re-runs against the new head
-    (the staged files become vacuum orphans)."""
-    chain = _rebase_chain(table, head, base)
-    bad = [m["snapshot"] for m in chain
-           if m.get("op") not in ("append", "set-spec")]
-    if bad:
-        raise CommitConflictError(
-            f"{table}: non-append commits {bad} interposed while this "
-            "COW rewrite ran — its inputs are stale; re-run against "
-            "the current head")
-    # per-file metadata of the interposed appends' own files: inline
-    # manifests carry it directly; chunked appends carry it in the
-    # sidecar(s) they appended (their chunk ids minus their parent's)
-    files: list[str] = []
-    stats: dict = {}
-    blooms: dict = {}
-    chain_parents = chain[1:] + [base_core]
-    for m, pm in zip(chain, chain_parents):
-        new = m.get("new_files") or []
-        if not new:
-            continue
-        files += new
-        if "chunks" in m:
-            # this commit's own sidecars = descriptors not in its
-            # parent. Within an append-only chain descriptors only
-            # move tail -> page (folds), never out of a page, so the
-            # parent's TAIL ids suffice — pages shared by ref are
-            # skipped wholesale, and a fold's new page is walked for
-            # the moved-in descs it may carry alongside fresh ones.
-            parent_ids = {ch["id"] for ch in pm.get("chunks") or []}
-            pm_pages = {pg["id"] for pg in pm.get("pages") or []}
-            cand = list(m.get("chunks") or [])
-            for pg in m.get("pages") or []:
-                if pg["id"] not in pm_pages:
-                    cand += _read_page(table, pg["id"])
-            for ch in cand:
-                if ch["id"] in parent_ids:
-                    continue
-                side = _read_chunk(table, ch["id"])
-                stats.update(side.get("stats") or {})
-                blooms.update(side.get("blooms") or {})
-        else:
-            stats.update({f: v for f, v in
-                          (m.get("stats") or {}).items() if f in new})
-            blooms.update({f: v for f, v in
-                           (m.get("blooms") or {}).items() if f in new})
-    if not files:
-        return
-    sub = {"files": files, "stats": stats, "blooms": blooms,
-           "stats_cols": base_core.get("stats_cols"),
-           "bloom_cols": base_core.get("bloom_cols")}
-    kept = _prune_from_man(sub, preds)["kept"]
-    if kept:
-        raise CommitConflictError(
-            f"{table}: interposed appends may contain this batch's "
-            f"keys ({len(kept)} file(s) not ruled out by spans/blooms) "
-            "— the located affected set is stale; re-run against the "
-            "current head")
-
-
-def _cow_rewrite_chunked(spark: SparkSession, table: str, core: dict,
-                         parent: str, key: str, keys_df: DataFrame,
-                         rewrite, op: str, txn_id: str | None,
-                         schema: StructType | None) -> str:
-    """Shared chunked-manifest COW engine (merge + key delete): the
-    candidate cut loads ONLY the sidecars the key batch's span/bloom
-    predicates can hit, the rewrite handles just the affected files,
-    and the publish reuses every untouched sidecar by id with the
-    affected members tombstoned — commit metadata is O(chunks hit),
-    never O(table). ``rewrite(affected_df)`` returns the replacement
-    rows for the affected files' live rows (None = publish nothing new
-    beyond survivors). ``rewrite``'s output MUST be derived from the
-    ``affected_df`` it receives: the affected-row count is collected
-    as an Observation on that frame by the landing write
-    (``_observed_count``), so a plan built from anything else would
-    block the commit on ``obs.get`` forever instead of failing loudly.
-
-    OPTIMISTIC (r6): the plan/locate/rewrite/land pipeline runs with
-    NO lease held; the publish takes the lease briefly and, if the
-    head moved, rebases through `_cow_rebase_guard` — key-disjoint
-    appends ride along, anything else conflicts."""
-    preds = _key_batch_predicates(key, keys_df)
-    plan = _prune_chunked(table, core, preds)
-    candidates = plan["kept"]
-    parent_schema = _schema_from_man(core)
-    affected = (_affected_scan(spark, table, candidates, key, keys_df,
-                               parent_schema,
-                               renames=core.get("renames"))
-                if candidates else set())
-    root = _data_root(table)
-    hybrid = {**core, "file_seq": plan["file_seq"]}
-    stats_cols = core.get("stats_cols")
-    bloom_cols = core.get("bloom_cols")
-    if affected:
-        affected_df, _obs = _observed_count(_read_live(
-            spark, table, hybrid,
-            [os.path.join(root, f) for f in sorted(affected)],
-            parent_schema))
-        survivors = rewrite(affected_df)
+    The affected files are read under the base schema (pre-evolution
+    files project NULL) with deletes applied (`_read_live`): a
+    rewritten file gets a FRESH generation, so a MOR-deleted row it
+    still carried would escape its mask and resurrect. Commits through
+    `_commit`, row ``merge``/``delete``; the predicates the rebase
+    re-checks are built here, lease-free, from the same key values the
+    locate step used."""
+    schema = _schema_from_man(core)
+    pub_schema = (schema if incoming is None else
+                  _merge_schema(schema, incoming, core.get("retired")))
+    # one bounded collect serves the candidate cut and the rebase
+    # predicates; an inline cut without stats or blooms on the key
+    # needs none, so a no-op commit collects nothing
+    meta = (core.get("stats_cols") or []) + (core.get("bloom_cols") or [])
+    vals = (_bounded_key_vals(key, keys_df)
+            if "chunks" in core or key in meta else _UNCOLLECTED)
+    view, by_chunk, preds = core, None, None
+    if "chunks" in core:
+        preds = _key_batch_predicates(key, keys_df, vals)
+        plan = _prune_chunked(table, core, preds)
+        candidates, by_chunk = plan["kept"], plan["by_chunk"]
+        view = {**core, "file_seq": plan["file_seq"]}
     else:
-        _obs = None
-        survivors = rewrite(None)
-    if survivors is None:  # nothing to rewrite AND nothing to add
-        return parent
-    new_files = _land_in_pool(survivors, table)
-    # observation collected by the landing write — no second read
-    affected_rows = int(_obs.get["rows"]) if _obs is not None else 0
-    new_rows, new_stats = _scan_new_files(spark, table, new_files,
-                                          stats_cols)
-    new_blooms = _scan_blooms(spark, table, new_files, bloom_cols,
-                              schema if schema is not None
-                              else survivors.schema)
-    with table_lease(table, owner=f"{op}:{key}",
-                     wait_s=_COMMIT_WAIT_S):
-        if txn_id is not None:  # decisive re-check under the lease
-            applied = _txn_already_applied(table, txn_id)
-            if applied is not None:
-                return applied
-        head = current_snapshot(table)
-        pub_core = core
-        if head != parent:
-            _cow_rebase_guard(table, head, parent, core, key, preds)
-            pub_core = _read_core(table, head)
-            if "chunks" not in pub_core:  # cannot happen under the
-                raise CommitConflictError(  # append-only guard, but
-                    f"{table}: manifest shape changed mid-rewrite")
-            if schema is not None:  # interposed appends may have
-                schema = _merge_schema(  # widened the table schema
-                    _schema_from_man(pub_core), schema)
-        pages, descs = _tombstoned_core(table, pub_core,
-                                        plan["by_chunk"], affected)
-        return _publish(
-            table, new_files,
-            pub_core["rows"] - affected_rows + new_rows,
-            head if head is not None else parent,
-            _chunk_file_count({"pages": pages, "chunks": descs}),
-            op=op, txn_id=txn_id,
-            new_files=new_files, schema=schema, stats=new_stats,
-            stats_cols=stats_cols, blooms=new_blooms,
-            bloom_cols=bloom_cols,
-            delete_files=pub_core.get("delete_files"),
-            parent_chunks=descs, parent_pages=pages)
-
-
-def _cow_inline_rebase(table: str, head: str, parent: str,
-                       core: dict, key: str, preds: list[tuple],
-                       affected_names: set) -> tuple[dict, list[str]]:
-    """Lease-held rebase step shared by the inline COW merge and
-    delete publishes: validate via `_cow_rebase_guard`, then re-derive
-    the untouched file set and the carry-metadata view from the new
-    head (whose extra files are key-disjoint appends by the guard's
-    contract, so the staged affected set is still exact)."""
-    _cow_rebase_guard(table, head, parent, core, key, preds)
-    man = _materialize(table, _read_core(table, head))
-    untouched = [f for f in man["files"] if f not in affected_names]
-    return man, untouched
+        candidates = _stat_candidates(core, key, keys_df, vals)
+    affected = (_affected_scan(spark, table, candidates, key, keys_df,
+                               schema, renames=core.get("renames"))
+                if candidates else set())
+    obs = affected_df = None
+    if affected:
+        root = _data_root(table)
+        affected_df, obs = _observed_count(_read_live(
+            spark, table, view,
+            [os.path.join(root, f) for f in sorted(affected)], schema))
+    survivors = rewrite(affected_df)
+    if survivors is None:
+        return base
+    if preds is None:
+        preds = _key_batch_predicates(key, keys_df, vals)
+    st = _stage(spark, table, _Staged(
+        op, base, core, schema=pub_schema, incoming=incoming,
+        removed=affected, by_chunk=by_chunk, key=key, preds=preds),
+        survivors)
+    # the landing write was the one action over `affected_df`
+    st.dropped = int(obs.get["rows"]) if obs is not None else 0
+    return _commit(spark, table, st, owner, txn_id)
 
 
 def merge_snapshot(spark: SparkSession, updates: DataFrame, table: str,
@@ -3976,136 +3935,37 @@ def merge_snapshot(spark: SparkSession, updates: DataFrame, table: str,
     the existing snapshot (the matview refresh path rides this — its
     stamp doubles as the source watermark).
 
-    OPTIMISTIC commit (r6, completing the writer matrix): the locate
-    scan, the rewrite, and the landing run with NO lease held; only
-    the metadata publish takes the lease. If the head moved, the
-    publish rebases IFF every interposed commit is an append whose
-    files provably contain no merge key (`_cow_rebase_guard` —
-    manifest spans/blooms, no data scan); anything else conflicts,
-    because the rewrite's inputs or its located affected set are
-    stale. So the common race — streaming appends landing while a
-    dimension merge rewrites — commits both sides with no lost
-    update, while overlapping writers stay serialized.
-
-    Operational note: against a CONTINUOUS merge-on-read lander
-    (run_stream_upsert committing every few seconds), a long COW
-    rewrite will find a MOR commit interposed on every attempt and
-    livelock on retries — rebasing over interposed masks would need
-    two mask-adjusted recounts under the lease, exactly the lease-held
-    work this design removes. On update-heavy tables use
-    ``merge_snapshot_mor`` (both sides then rebase) and let
-    ``optimize_table`` do the rewriting: its compaction rebases over
-    MOR commits via base-generation stamping."""
+    Commits through `_commit`, row ``merge``: streaming appends landing
+    while a dimension merge rewrites both commit, while overlapping
+    writers stay serialized. Against a CONTINUOUS merge-on-read lander
+    (run_stream_upsert committing every few seconds) a long COW
+    rewrite finds a MOR commit interposed on every attempt and
+    livelocks on retries; on update-heavy tables use
+    ``merge_snapshot_mor`` and let ``optimize_table`` do the
+    rewriting."""
     os.makedirs(table, exist_ok=True)
-    if txn_id is not None:  # cheap pre-check: replays skip the work
-        applied = _txn_already_applied(table, txn_id)
-        if applied is not None:
-            return applied
+    applied = _txn_already_applied(table, txn_id)
+    if applied is not None:  # replays skip the work
+        return applied
+    owner = f"merge_snapshot:{key}"
     parent = current_snapshot(table)
-    if parent is None:  # first commit: cheap, stay pessimistic
-        with table_lease(table, owner=f"merge_snapshot:{key}",
-                         wait_s=_COMMIT_WAIT_S):
-            if current_snapshot(table) is None:
-                files = _land_in_pool(updates, table)
-                rows = _count_pool_rows(spark, table, files)
-                return _publish(table, files, rows, None, 0,
-                                op="merge", txn_id=txn_id,
-                                schema=updates.schema)
+    if parent is None:
+        first = _first_commit(spark, updates, table, owner, txn_id)
+        if first is not None:
+            return first
         parent = current_snapshot(table)
-
-    core = _read_core(table, parent)
-    if "chunks" in core:
-        schema = _merge_schema(_schema_from_man(core),
-                               updates.schema, core.get("retired"))
-        keys = updates.select(key).distinct()
-
-        def rewrite(affected_df):
-            if affected_df is None:
-                return updates  # pure insert batch
-            return (affected_df
-                    .join(F.broadcast(keys), key, "left_anti")
-                    .unionByName(updates,
-                                 allowMissingColumns=True))
-
-        return _cow_rewrite_chunked(spark, table, core, parent,
-                                    key, keys, rewrite, "merge",
-                                    txn_id, schema)
-    parent_man = core
-    stats_cols = parent_man.get("stats_cols")
-    parent_schema = _schema_from_man(parent_man)
-    schema = _merge_schema(parent_schema, updates.schema,
-                           parent_man.get("retired"))
     keys = updates.select(key).distinct()
 
-    # ---- expensive staging: NO lease held ----
-    affected_paths, untouched = _locate_affected(
-        spark, table, parent_man, key, keys)
+    def rewrite(affected_df):
+        if affected_df is None:
+            return updates  # pure insert batch
+        return (affected_df
+                .join(F.broadcast(keys), key, "left_anti")
+                .unionByName(updates, allowMissingColumns=True))
 
-    # Rewrite: survivors of ONLY the affected files, plus updates.
-    # Affected files are read under the PARENT schema — post-
-    # evolution files keep their evolved values, pre-evolution
-    # files project NULL (inference would take whichever footer
-    # lists first and silently drop evolved columns). The read is
-    # delete-applied (_read_live): a rewritten file gets a FRESH
-    # generation, so any MOR-deleted row it still carried would
-    # escape its delete mask and resurrect.
-    if affected_paths:
-        affected, _obs = _observed_count(
-            _read_live(spark, table, parent_man,
-                       affected_paths, parent_schema))
-        survivors = (
-            affected
-            .join(F.broadcast(keys), key, "left_anti")
-            .unionByName(updates, allowMissingColumns=True)
-        )
-    else:
-        _obs = None
-        survivors = updates
-    new_files = _land_in_pool(survivors, table)
-    # the landing write was the one action over `affected`: collect
-    # its row count from the observation, no second read
-    affected_rows = int(_obs.get["rows"]) if _obs is not None else 0
-
-    # Row count maintained incrementally — metadata upkeep scans
-    # only the touched files, never the whole table.
-    new_rows, new_stats = _scan_new_files(spark, table, new_files,
-                                          stats_cols)
-    new_blooms = _scan_blooms(spark, table, new_files,
-                              parent_man.get("bloom_cols"), schema)
-    affected_names = {os.path.basename(p) for p in affected_paths}
-    # predicates for the (rare) rebase guard, built NOW so the lease
-    # never holds a Spark job — and so the guard checks the SAME key
-    # batch the staged rewrite used (a non-deterministic updates
-    # lineage re-evaluated under the lease could diverge)
-    preds = _key_batch_predicates(key, keys)
-
-    # ---- metadata publish: lease held briefly ----
-    with table_lease(table, owner=f"merge_snapshot:{key}",
-                     wait_s=_COMMIT_WAIT_S):
-        if txn_id is not None:  # decisive re-check under the lease
-            applied = _txn_already_applied(table, txn_id)
-            if applied is not None:
-                return applied  # lost a replay race: files orphan
-        head = current_snapshot(table)
-        if head != parent:
-            parent_man, untouched = _cow_inline_rebase(
-                table, head, parent, core, key, preds,
-                affected_names)
-            schema = _merge_schema(_schema_from_man(parent_man),
-                                   updates.schema)
-            parent = head
-        rows = parent_man["rows"] - affected_rows + new_rows
-        return _publish(table, untouched + new_files, rows, parent,
-                        len(untouched), op="merge", txn_id=txn_id,
-                        new_files=new_files, schema=schema,
-                        stats=_carry_stats(parent_man, untouched,
-                                           new_stats),
-                        stats_cols=stats_cols,
-                        blooms=_carry_blooms(parent_man, untouched,
-                                             new_blooms),
-                        bloom_cols=parent_man.get("bloom_cols"),
-                        file_seq=parent_man.get("file_seq"),
-                        delete_files=parent_man.get("delete_files"))
+    return _cow_commit(spark, table, "merge", parent,
+                       _read_core(table, parent), key, keys, rewrite,
+                       owner, txn_id, updates.schema)
 
 
 def _observed_count(df: DataFrame):
@@ -4120,7 +3980,7 @@ def _observed_count(df: DataFrame):
     CONTRACT (ADVICE r11): the action the caller runs MUST consume a
     plan derived from the returned ``observed_df`` — ``obs.get``
     blocks until the observed node executes, so a rewrite callback
-    (``_cow_rewrite_chunked``'s parameter) that builds its output
+    (``_cow_commit``'s parameter) that builds its output
     from anything else would hang the commit instead of failing
     loudly. Every in-repo rewrite derives from ``affected_df``; keep
     it that way."""
@@ -4194,45 +4054,6 @@ def _mor_matched(spark: SparkSession, table: str, man: dict,
     return _mor_live_matches(spark, table, man, key, keys_df, vals)
 
 
-def _rebase_mor_matched(spark: SparkSession, table: str,
-                        head: str, base: str | None, head_man: dict,
-                        key: str, keys_df: DataFrame,
-                        matched_base: int) -> int:
-    """Rebase an optimistic MOR commit's decrement count from the
-    ``base`` it staged against onto the moved ``head``:
-
-    * interposed APPENDS only — the base count stays exact (appends
-      never unlive a base row) and only the appended files can hold
-      additional matching rows, so count matches over JUST those files
-      (they postdate every pending mask: raw count is live count);
-    * anything that rewrote or masked rows (COW merge/delete, MOR
-      commits, compaction) — the base count is stale in both
-      directions; recount live matches against the head (still the
-      metadata-pruned key-column count, never a table scan). The mask
-      being published is key-based and sequenced at the PUBLISH
-      generation, so it stays semantically exact over any interposed
-      lineage — last-writer-wins, the MOR commit serializing after
-      whatever interposed;
-    * a FULL REFRESH (op=overwrite) is a semantic barrier: the batch
-      was staged against content that no longer exists — conflict."""
-    chain = _rebase_chain(table, head, base)
-    ops = {m.get("op") for m in chain}
-    if "overwrite" in ops:
-        raise CommitConflictError(
-            f"{table}: a full refresh interposed while this MOR "
-            f"commit was staging — re-run against the new table")
-    if ops <= {"append"}:
-        appended = [f for m in chain for f in (m.get("new_files") or [])]
-        if not appended:
-            return matched_base
-        return matched_base + _key_semi(
-            _read_pool(spark, table, appended,
-                       _schema_from_man(head_man),
-                       renames=head_man.get("renames")).select(key),
-            key, keys_df, _bounded_key_vals(key, keys_df)).count()
-    return _mor_matched(spark, table, head_man, key, keys_df)
-
-
 def merge_snapshot_mor(spark: SparkSession, updates: DataFrame,
                        table: str, key: str,
                        txn_id: str | None = None,
@@ -4254,23 +4075,18 @@ def merge_snapshot_mor(spark: SparkSession, updates: DataFrame,
     ``delete_keys_mor``: readers pay a driver read of the delete files
     and a literal filter per delete-key column (a broadcast anti-join
     past the driver budget) until ``compact_snapshot``/
-    ``optimize_table`` applies the masks. Row accounting stays exact via the stats-pruned
-    key-column-only live-match count (the locate step's cheap half).
+    ``optimize_table`` applies the masks. Row accounting stays exact
+    via the stats-pruned key-column-only live-match count (the locate
+    step's cheap half).
 
     Prefer COW ``merge_snapshot`` when batches are key-clustered (it
     rewrites ~the files the range hits and keeps reads mask-free);
     prefer MOR when updates scatter. Iceberg v2's
     write.update.mode=merge-on-read, on the manifest-pointer pattern.
 
-    OPTIMISTIC commit (r6): the batch lands, its stats/bloom scans
-    run, and the delete file is written with NO lease held — only the
-    metadata publish takes the lease. A head that moved meanwhile is
-    rebased onto via ``_rebase_mor_matched``: interposed appends cost
-    one key-column count over just their files, anything row-rewriting
-    or masking costs one recount against the new head, and only a full
-    refresh conflicts. A streaming MOR-upsert lander therefore never
-    blocks behind (or is blocked by) a concurrent COW merge beyond the
-    merge's own lease hold — both commit.
+    Commits through `_commit`, row ``merge-mor``: a streaming
+    MOR-upsert lander never blocks behind a concurrent COW merge
+    beyond the merge's own publish — both commit.
 
     ``branch`` stages the commit on a NAMED REF (write-audit-publish),
     same contract as ``append_snapshot(branch=)``: invisible to table
@@ -4286,38 +4102,26 @@ def merge_snapshot_mor(spark: SparkSession, updates: DataFrame,
     Row accounting counts live matches of the WHOLE mask, so `rows`
     stays exact."""
     os.makedirs(table, exist_ok=True)
-
-    _head = functools.partial(_branch_head, table, branch)
-
-    if txn_id is not None:  # cheap pre-check: replayed batch skips
-        applied = _txn_already_applied(table, txn_id, start=_head())
-        if applied is not None:
-            return applied
-    base = _head()
-    if base is None:  # first commit: cheap, stay pessimistic
-        with table_lease(table, owner=f"merge_snapshot_mor:{key}",
-                         wait_s=_COMMIT_WAIT_S):
-            if _head() is None:
-                files = _land_in_pool(updates, table)
-                rows = _count_pool_rows(spark, table, files)
-                return _publish(table, files, rows, None, 0,
-                                op="merge", txn_id=txn_id,
-                                schema=updates.schema, ref=branch)
-        base = _head()  # raced a table creation: continue against it
-
-    base_man = _read_core(table, base)
-    stats_cols = base_man.get("stats_cols")
-    bloom_cols = base_man.get("bloom_cols")
-    _merge_schema(_schema_from_man(base_man), updates.schema,
-                  base_man.get("retired"))  # early
-
-    # ---- expensive staging: NO lease held ----
-    new_files = _land_in_pool(
-        _cluster_to_spec(updates, base_man.get("partition_spec")),
-        table)
-    new_rows, new_stats = _scan_new_files(spark, table, new_files,
-                                          stats_cols)
-    if new_rows == 0:
+    applied = _txn_already_applied(table, txn_id, branch)
+    if applied is not None:  # a replayed batch skips the work
+        return applied
+    owner = f"merge_snapshot_mor:{key}"
+    base = _branch_head(table, branch)
+    if base is None:
+        first = _first_commit(spark, updates, table, owner, txn_id,
+                              branch)
+        if first is not None:
+            return first
+        base = _branch_head(table, branch)  # raced a table creation
+    core = _read_core(table, base)
+    st = _Staged("merge-mor", base, core, incoming=updates.schema,
+                 schema=_merge_schema(_schema_from_man(core),
+                                      updates.schema,
+                                      core.get("retired")),  # early
+                 key=key)
+    _land(spark, table, st,
+          _cluster_to_spec(updates, core.get("partition_spec")))
+    if st.new_rows == 0:
         if extra_mask_keys is not None:
             raise ValueError(
                 f"{table}: merge_snapshot_mor got an empty update "
@@ -4327,72 +4131,17 @@ def merge_snapshot_mor(spark: SparkSession, updates: DataFrame,
         # empty files are orphans for vacuum) — a dead mask entry
         # would force every reader onto the sequenced path and
         # count toward optimize_table's compaction threshold
-    new_blooms = _scan_blooms(spark, table, new_files, bloom_cols,
-                              updates.schema)
+    st.blooms = _scan_blooms(spark, table, st.files, st.bloom_cols,
+                             st.frame_schema)
     # The mask: the batch's distinct keys, derived from the landed
     # files (one pass over the caller's lineage — the write), widened
     # by extra_mask_keys. Small masks derive and land on the driver
     # (r12, guide §5 — zero extra Spark jobs); see _land_mask.
-    del_files, batch_keys, _ = _land_mask(spark, table, key, new_files,
+    del_files, st.keys_df, _ = _land_mask(spark, table, key, st.files,
                                           extra_mask_keys)
-    matched = _mor_matched(spark, table, base_man, key, batch_keys)
-    entries = [{"file": f, "key": key, "seq": None}
-               for f in del_files]
-
-    # ---- metadata publish: lease held briefly ----
-    with table_lease(table, owner=f"merge_snapshot_mor:{key}",
-                     wait_s=_COMMIT_WAIT_S):
-        if txn_id is not None:  # decisive re-check under the lease
-            applied = _txn_already_applied(table, txn_id,
-                                           start=_head())
-            if applied is not None:
-                return applied  # lost a replay race: files orphan
-        parent = _head()
-        parent_man = (base_man if parent == base
-                      else _read_core(table, parent))
-        if parent != base:
-            matched = _rebase_mor_matched(
-                spark, table, parent, base, parent_man, key,
-                batch_keys, matched)
-            if sorted(parent_man.get("stats_cols") or []) != sorted(
-                    stats_cols or []):  # opt-ins moved (full refresh
-                stats_cols = parent_man.get("stats_cols")  # conflicts,
-                _, new_stats = _scan_new_files(  # but stay defensive)
-                    spark, table, new_files, stats_cols)
-            if sorted(parent_man.get("bloom_cols") or []) != sorted(
-                    bloom_cols or []):
-                bloom_cols = parent_man.get("bloom_cols")
-                new_blooms = _scan_blooms(spark, table, new_files,
-                                          bloom_cols, updates.schema)
-        schema = _merge_schema(_schema_from_man(parent_man),
-                               updates.schema)
-        if "chunks" in parent_man:  # O(commit) metadata: one new
-            return _publish(  # sidecar, parent chunks reused
-                table, new_files,
-                parent_man["rows"] - matched + new_rows, parent,
-                _chunk_file_count(parent_man), op="merge-mor",
-                txn_id=txn_id, new_files=new_files, schema=schema,
-                stats=new_stats, stats_cols=stats_cols,
-                blooms=new_blooms, bloom_cols=bloom_cols,
-                delete_files=(parent_man.get("delete_files") or [])
-                + entries,
-                parent_chunks=parent_man["chunks"],
-                parent_pages=parent_man.get("pages"), ref=branch)
-        parent_man = _materialize(table, parent_man)
-        rows = parent_man["rows"] - matched + new_rows
-        return _publish(
-            table, parent_man["files"] + new_files, rows, parent,
-            len(parent_man["files"]), op="merge-mor", txn_id=txn_id,
-            new_files=new_files, schema=schema,
-            stats=_carry_stats(parent_man, parent_man["files"],
-                               new_stats),
-            stats_cols=stats_cols,
-            blooms=_carry_blooms(parent_man, parent_man["files"],
-                                 new_blooms),
-            bloom_cols=bloom_cols,
-            file_seq=parent_man.get("file_seq"),
-            delete_files=(parent_man.get("delete_files") or [])
-            + entries, ref=branch)
+    st.masks = [{"file": f, "key": key, "seq": None} for f in del_files]
+    st.dropped = _mor_matched(spark, table, core, key, st.keys_df)
+    return _commit(spark, table, st, owner, txn_id, branch)
 
 
 #: Age floor for reaping crashed writers' ``__staging-*`` dirs: long
@@ -4704,14 +4453,15 @@ def optimize_table(spark: SparkSession, table: str,
        files below half the ``target_file_rows`` fill, or more than
        ``max_delete_files`` pending delete files (each costs every
        reader a driver read and a wider scan filter until applied,
-       and a broadcast anti-join past the driver budget). The default
-       of 4
-       comes from the measured cadence curve (BASELINE.md round-5 MOR
-       row: +1.75 s fixed once any mask pends, ~0.24 s per additional
-       mask, compaction ~14 s @15M): ``k* = sqrt(2·C/(ρ·slope))`` ≈ 4–6
-       at the read-heavy ratio ρ≈3–5 the dashboard shape implies —
-       raise toward ~10 for landing-heavy pipelines where reads are
-       rare;
+       and a broadcast anti-join past the driver budget). On the
+       literal mask path that tax is small and flat: with 1–8 pending
+       masks a full read took 0.62–0.77 s against 0.56 s compacted
+       (scripts/stress_mor_cadence.py, 150k orders in 64 files,
+       4-core host), not growing with the count. So the default of 4
+       compacts well before reads pay for the masks; it bounds the
+       delete files every reader lists and the joins a mask past the
+       driver budget falls back to. Raise it for landing-heavy
+       pipelines where reads are rare;
     2. **vacuum** superseded snapshots afterwards, keeping
        ``vacuum_keep`` versions and never reaping anything younger
        than the retention floor (in-flight readers).
@@ -4856,77 +4606,22 @@ def delete_keys_snapshot(spark: SparkSession, table: str, key: str,
     when vacuum reaps the superseded snapshots, so retention `keep`
     bounds the erasure latency.)
 
-    OPTIMISTIC commit (r6): locate/rewrite/land run lease-free; the
-    publish rebases over key-disjoint interposed appends and
-    conflicts on anything else (same `_cow_rebase_guard` contract as
-    `merge_snapshot`)."""
+    Commits through `_commit`, row ``delete`` (COW, like
+    ``merge_snapshot``)."""
     parent = current_snapshot(table)
     if parent is None:
         raise NoCurrentSnapshotError(table)
-    core = _read_core(table, parent)
     doomed_keys = doomed.select(key).distinct()
-    if "chunks" in core:
-        def rewrite(affected_df):
-            if affected_df is None:
-                return None  # no file holds a doomed key: no-op
-            return affected_df.join(F.broadcast(doomed_keys), key,
-                                    "left_anti")
 
-        return _cow_rewrite_chunked(
-            spark, table, core, parent, key, doomed_keys, rewrite,
-            "delete", None, _schema_from_man(core))
-    parent_man = core
-    parent_schema = _schema_from_man(parent_man)
+    def rewrite(affected_df):
+        if affected_df is None:
+            return None  # no file holds a doomed key: no-op
+        return affected_df.join(F.broadcast(doomed_keys), key,
+                                "left_anti")
 
-    # ---- expensive staging: NO lease held ----
-    affected_paths, untouched = _locate_affected(
-        spark, table, parent_man, key, doomed_keys)
-    if not affected_paths:
-        return parent  # nothing to forget: current stays
-    stats_cols = parent_man.get("stats_cols")
-    affected, _obs = _observed_count(
-        _read_live(spark, table, parent_man, affected_paths,
-                   parent_schema))  # schema'd + MOR-applied:
-    survivors = affected.join(F.broadcast(doomed_keys), key,
-                              "left_anti")  # see merge_snapshot
-    new_files = _land_in_pool(survivors, table)
-    affected_rows = int(_obs.get["rows"])  # collected by the landing
-    new_rows, new_stats = _scan_new_files(spark, table, new_files,
-                                          stats_cols)
-    new_blooms = _scan_blooms(
-        spark, table, new_files, parent_man.get("bloom_cols"),
-        parent_schema if parent_schema is not None
-        else survivors.schema)
-    affected_names = {os.path.basename(p) for p in affected_paths}
-    preds = _key_batch_predicates(key, doomed_keys)  # staged, no lease
-
-    # ---- metadata publish: lease held briefly ----
-    with table_lease(table, owner=f"delete_keys:{key}",
-                     wait_s=_COMMIT_WAIT_S):
-        head = current_snapshot(table)
-        if head != parent:
-            parent_man, untouched = _cow_inline_rebase(
-                table, head, parent, core, key, preds,
-                affected_names)
-            # a schema-widening append may have interposed: publish
-            # the HEAD's schema, never the stale base view (silently
-            # narrowing it would drop the appended column from every
-            # later read)
-            parent_schema = _schema_from_man(parent_man)
-            parent = head
-        rows = parent_man["rows"] - affected_rows + new_rows
-        return _publish(table, untouched + new_files, rows, parent,
-                        len(untouched), op="delete",
-                        new_files=new_files,
-                        schema=parent_schema,
-                        stats=_carry_stats(parent_man, untouched,
-                                           new_stats),
-                        stats_cols=stats_cols,
-                        blooms=_carry_blooms(parent_man, untouched,
-                                             new_blooms),
-                        bloom_cols=parent_man.get("bloom_cols"),
-                        file_seq=parent_man.get("file_seq"),
-                        delete_files=parent_man.get("delete_files"))
+    return _cow_commit(spark, table, "delete", parent,
+                       _read_core(table, parent), key, doomed_keys,
+                       rewrite, f"delete_keys:{key}")
 
 
 def delete_keys_mor(spark: SparkSession, table: str, key: str,
@@ -4961,24 +4656,16 @@ def delete_keys_mor(spark: SparkSession, table: str, key: str,
     (mastercontrol_pipeline/file_processor.py) — row deletes the
     reference gets transactionally from PostgreSQL.
 
-    OPTIMISTIC commit (r6, same contract as ``merge_snapshot_mor``):
-    the delete file lands and the decrement counts with NO lease held;
-    the publish rebases onto a moved head (appends: incremental count
-    over just their files; row-rewriting/masking commits: one recount;
-    full refresh: conflict). ``branch`` stages the mask on a named ref
-    for write-audit-publish."""
-
-    _head = functools.partial(_branch_head, table, branch)
-
-    base = _head()
+    Commits through `_commit`, row ``delete-mor``. ``branch`` stages
+    the mask on a named ref for write-audit-publish."""
+    base = _branch_head(table, branch)
     if base is None:
         raise NoCurrentSnapshotError(table)
-    base_man = _read_core(table, base)
-    schema = _schema_from_man(base_man)
+    core = _read_core(table, base)
+    schema = _schema_from_man(core)
     if schema is not None and key not in {f.name
                                           for f in schema.fields}:
         raise ValueError(f"delete key {key!r} not in table schema")
-    # ---- staging: NO lease held ----
     # Land the delete file FIRST, then derive everything else
     # (count, span, decrement join) from the landed kilobytes. An
     # empty batch leaves one orphan pool file (vacuum reaps it, same
@@ -4987,45 +4674,14 @@ def delete_keys_mor(spark: SparkSession, table: str, key: str,
                                                 df=doomed)
     if n_keys == 0:
         return base  # nothing to forget: current stays
-
-    entries = [{"file": f, "key": key, "seq": None, "keys": n_keys}
-               for f in del_files]  # seq stamped by _publish
-    matched = _mor_matched(spark, table, base_man, key, doomed_keys)
-
-    # ---- metadata publish: lease held briefly ----
-    with table_lease(table, owner=f"delete_keys_mor:{key}",
-                     wait_s=_COMMIT_WAIT_S):
-        parent = _head()
-        parent_man = (base_man if parent == base
-                      else _read_core(table, parent))
-        if parent != base:
-            matched = _rebase_mor_matched(
-                spark, table, parent, base, parent_man, key,
-                doomed_keys, matched)
-            schema = _schema_from_man(parent_man)
-        if "chunks" in parent_man:  # O(commit) metadata: no new data
-            return _publish(  # files at all, all chunks reused
-                table, [], parent_man["rows"] - matched, parent,
-                _chunk_file_count(parent_man), op="delete-mor",
-                new_files=[], schema=schema,
-                stats_cols=parent_man.get("stats_cols"),
-                bloom_cols=parent_man.get("bloom_cols"),
-                delete_files=(parent_man.get("delete_files") or [])
-                + entries,
-                parent_chunks=parent_man["chunks"],
-                parent_pages=parent_man.get("pages"), ref=branch)
-        parent_man = _materialize(table, parent_man)
-        return _publish(
-            table, parent_man["files"], parent_man["rows"] - matched,
-            parent, len(parent_man["files"]), op="delete-mor",
-            new_files=[], schema=schema,
-            stats=_carry_stats(parent_man, parent_man["files"], None),
-            stats_cols=parent_man.get("stats_cols"),
-            blooms=_carry_blooms(parent_man, parent_man["files"], None),
-            bloom_cols=parent_man.get("bloom_cols"),
-            file_seq=parent_man.get("file_seq"),
-            delete_files=(parent_man.get("delete_files") or [])
-            + entries, ref=branch)
+    st = _Staged(
+        "delete-mor", base, core, schema=schema, key=key,
+        keys_df=doomed_keys,
+        masks=[{"file": f, "key": key, "seq": None, "keys": n_keys}
+               for f in del_files],  # seq stamped by _publish
+        dropped=_mor_matched(spark, table, core, key, doomed_keys))
+    return _commit(spark, table, st, f"delete_keys_mor:{key}",
+                   branch=branch)
 
 
 def _chain_between(table: str, since: str,

@@ -211,6 +211,48 @@ def test_land_mask_broken_driver_step_falls_back(
     assert n == 3 and sorted(r[0] for r in keys.collect()) == [3, 7, 25]
 
 
+@pytest.mark.parametrize("step", ["pyarrow_read", "local_relation"])
+def test_land_mask_driver_errors_fall_back(spark, monkeypatch, base,
+                                          arrow_landings, step):
+    """The errors the driver path raises on a file or type it cannot
+    handle take the Spark path: pyarrow's ArrowInvalid on an
+    unreadable pool file (Spark lands the mask), and the
+    PySparkTypeError ``createDataFrame`` raises for a type with no
+    Arrow conversion (the driver-landed file is read back)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
+
+    files = V._land_in_pool(_upd(spark), base)
+    if step == "pyarrow_read":
+        def unreadable(*a, **k):
+            raise pa.ArrowInvalid("Parquet magic bytes not found")
+        monkeypatch.setattr(pq, "read_table", unreadable)
+    else:
+        def no_arrow(*a, **k):
+            raise PySparkTypeError(
+                errorClass="UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION",
+                messageParameters={"data_type": "uint64"})
+        monkeypatch.setattr(spark, "createDataFrame", no_arrow)
+    del_files, keys, n = V._land_mask(spark, base, "k", files)
+    assert arrow_landings == ([] if step == "pyarrow_read" else [3])
+    assert n == 3 and sorted(r[0] for r in keys.collect()) == [3, 7, 25]
+
+
+def test_land_mask_propagates_other_errors(spark, monkeypatch, base,
+                                           arrow_landings):
+    """A bug in the driver path is not silently rerouted to Spark."""
+    files = V._land_in_pool(_upd(spark), base)
+
+    def broken(*a, **k):
+        raise KeyError("driver bug")
+
+    monkeypatch.setattr(V, "_driver_mask_keys", broken)
+    with pytest.raises(KeyError, match="driver bug"):
+        V._land_mask(spark, base, "k", files)
+    assert arrow_landings == []
+
+
 def test_land_arrow_schema_parity_typed_keys(spark, tmp_path):
     """Driver-written pool files read back with the same Spark schema
     as Spark-written ones for the supported key types."""

@@ -310,10 +310,11 @@ def test_in_probe_matches_per_value_reference(values, batch):
 
 
 # ---------------------------------------------------------------------------
-# _cow_rebase_guard (r6 optimistic COW): the data-loss-critical half is
-# completeness — whenever an interposed append's file TRULY contains a
-# batch key, the guard must CONFLICT (rebasing would publish a merge
-# that silently missed that row). False conflicts just cost a retry.
+# The COW rebase rule (`_rebase_cow`, r6 optimistic COW): the
+# data-loss-critical half is completeness — whenever an interposed
+# append's file TRULY contains a batch key, the rule must CONFLICT
+# (rebasing would publish a merge that silently missed that row).
+# False conflicts just cost a retry.
 # ---------------------------------------------------------------------------
 
 
@@ -336,11 +337,13 @@ def test_cow_rebase_guard_conflicts_on_true_key_overlap(appended,
     from mc_ns_data_pipeline_spark.sinks.versioned import (
         CommitConflictError,
         _bloom_b64,
-        _cow_rebase_guard,
         _key_batch_predicates,  # noqa: F401  (shape documented here)
         _InProbe,
         _manifest_path,
+        _rebase_chain,
+        _rebase_cow,
         _snapshots_root,
+        _Staged,
         _stat_bounds,
     )
 
@@ -375,8 +378,11 @@ def test_cow_rebase_guard_conflicts_on_true_key_overlap(appended,
         preds = [("k", "in", _InProbe(batch))]
         overlap = bool(set(appended) & set(batch))
         try:
-            _cow_rebase_guard(table, "00000002-a", "00000001-b",
-                              base_core, "k", preds)
+            _rebase_cow(None, table,
+                        _Staged("merge", "00000001-b", base_core,
+                                key="k", preds=preds),
+                        _rebase_chain(table, "00000002-a", "00000001-b"),
+                        head_core)
             conflicted = False
         except CommitConflictError:
             conflicted = True
