@@ -714,10 +714,11 @@ def cmd_cdc_apply(args) -> int:
     through the public capped runners
     (streaming/incremental.py run_stream_apply_changes /
     run_stream_matview). One invocation drains the backlog available
-    at call time to completion (capped backlogs as ⌈N/cap⌉
-    checkpointed batches) and exits; schedule it like the reference
-    schedules incremental_fetch.py. Re-running with the same
-    --checkpoint resumes exactly-once after any kill."""
+    at call time to completion (capped backlogs as ⌈N/cap⌉ batches,
+    each recorded in the --checkpoint dir's cursor file before it is
+    applied) and exits, starting no streaming query; schedule it like
+    the reference schedules incremental_fetch.py. Re-running with the
+    same --checkpoint resumes exactly-once after any kill."""
     spark = _session("cdc-apply")
     if args.view:
         if not (args.group_col and args.value_col):

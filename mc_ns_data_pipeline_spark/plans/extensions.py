@@ -4480,19 +4480,19 @@ def xs18_cdc_apply_replica(spark: SparkSession, sf_dir: str
     VERDICT r10 #3/#4): the change feed of a versioned SOURCE table
     drives BOTH a row-level REPLICA and an aggregate MATERIALIZED
     VIEW through the public ``run_stream_matview`` runner
-    (streaming/incremental.py) — ``read_stream_changes`` →
-    foreachBatch (``matview_delta_batch`` then
-    ``apply_change_batch``), the reference's per-lot
-    delete-then-insert replace (file_processor.py:96-118) as a
-    streaming consumer with a single pointer flip per table per
-    batch, under admission control (``max_commits_per_trigger`` —
-    the bounded-broadcast guarantee of VERDICT r10 #2, through the
-    public runner's capped drain loop).
+    (streaming/incremental.py) — the change feed's batches, drained
+    in a driver loop (``matview_delta_batch`` then
+    ``apply_change_batch`` per batch, no streaming query), the
+    reference's per-lot delete-then-insert replace
+    (file_processor.py:96-118) as a feed consumer with a single
+    pointer flip per table per batch, under admission control
+    (``max_commits_per_trigger`` — the bounded-broadcast guarantee of
+    VERDICT r10 #2, through the public runner's capped drain loop).
 
     Lifecycle: source = orders quarter-slice k%3==0 with group col
     g=k%2; replica initialized as a copy at that mark; the view is
-    seeded by the runner from the replica BEFORE the stream (deltas
-    alone cannot reconstruct pre-stream contributions); then an
+    seeded by the runner from the replica BEFORE the drain (deltas
+    alone cannot reconstruct pre-feed contributions); then an
     append (k%3==1), a MOR delete (k%6==0) and a MOR upsert (k%6==4
     at price+1000) land on the SOURCE; one capped drain follows.
 
@@ -4512,8 +4512,10 @@ def xs18_cdc_apply_replica(spark: SparkSession, sf_dir: str
     tests/test_streaming_cdc_apply.py / test_streaming_matview.py.
 
     Scale: per batch O(batch events) apply work + an O(batch keys)
-    broadcast left-semi against the replica — bounded because the
-    feed is capped; the replica and view are never rewritten."""
+    literal IN filter against the replica — bounded because the
+    feed is capped; the replica and view are never rewritten. A batch
+    within the driver budget is read and netted on the driver and
+    reaches both halves as a LocalTableScan."""
     import os
 
     from mc_ns_data_pipeline_spark.sinks import versioned as V

@@ -20,9 +20,12 @@ a status log for cross-run dedup, and per-lot delete+insert replacement
 from __future__ import annotations
 
 import decimal
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 WINDOW = "6 hours"
 WATERMARK = "6 hours"
@@ -1224,13 +1227,16 @@ def run_stream_ann_index(spark: SparkSession, emb_path: str,
     )
 
 
+#: The change feed's meta columns, and the window's row number.
+_META = ("_change_type", "_commit_gen", "_rn")
+
+
 def _net_actions(batch_df: DataFrame, key: str) -> DataFrame:
     """Collapse one change-feed batch to the NET action per key — the
     documented consumer rule: latest generation wins, and at equal
     generation an insert beats the delete that retracted the old
-    version (the MOR-upsert retract+reinsert case). Shared by the
-    view and apply halves of a batch so the window shuffle runs
-    once (run_stream_matview passes the persisted result to both)."""
+    version (the MOR-upsert retract+reinsert case). ``_net_rows`` is
+    the same rule on the driver."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(key).orderBy(
@@ -1240,15 +1246,36 @@ def _net_actions(batch_df: DataFrame, key: str) -> DataFrame:
             .filter(F.col("_rn") == 1))
 
 
+def _net_rows(tbl, key: str):
+    """``_net_actions`` over a pyarrow change batch: per key (NULL
+    being one key, as in the window's partitioning) the row of the
+    latest generation, an insert before a delete at equal generation.
+    Only for key types whose equality the driver decides as Spark
+    does (``_mask_type_ok``)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    order = pa.table({
+        "k": tbl.column(key),
+        "gen": tbl.column("_commit_gen"),
+        "ins": pc.equal(tbl.column("_change_type"), "insert"),
+        "i": np.arange(tbl.num_rows, dtype=np.int64),
+    }).sort_by([("k", "ascending"), ("gen", "descending"),
+                ("ins", "descending")])
+    first = (order.group_by("k", use_threads=False)
+             .aggregate([("i", "first")]))
+    return tbl.take(first.column("i_first"))
+
+
 def apply_change_batch(spark: SparkSession, batch_df: DataFrame,
                        replica: str, key: str,
                        branch: str, net: DataFrame | None = None
                        ) -> None:
-    """Apply one micro-batch of a versioned-table CHANGE FEED to a
-    REPLICA versioned table — the downstream half of the CDC
-    round-trip (VERDICT r09 #6; the reference's per-lot
-    delete-then-insert replace, file_processor.py:96-118, as a stream
-    consumer).
+    """Apply one batch of a versioned-table CHANGE FEED to a REPLICA
+    versioned table — the downstream half of the CDC round-trip
+    (VERDICT r09 #6; the reference's per-lot delete-then-insert
+    replace, file_processor.py:96-118, as a feed consumer).
 
     The batch carries (row columns..., _change_type, _commit_gen).
     The documented consumer rule collapses it to a NET action per key
@@ -1264,89 +1291,135 @@ def apply_change_batch(spark: SparkSession, batch_df: DataFrame,
     replace exposes — and the per-batch commit cost halves. A
     pure-delete batch is a plain ``delete_keys_mor``.
 
-    Idempotent as a UNIT: replaying the whole batch (Spark replays
-    the one batch a crash can leave uncommitted) re-derives the same
-    net action and re-applies it — the replay's mask retracts the
-    first application's rows and the identical rows re-land, so the
-    net replica state is reproduced. That unit idempotence is why
-    the commit needs no txn stamp.
+    Idempotent as a UNIT: replaying the whole batch (the runners
+    replay the one batch a crash can leave uncommitted) re-derives
+    the same net action and re-applies it — the replay's mask
+    retracts the first application's rows and the identical rows
+    re-land, so the net replica state is reproduced. That unit
+    idempotence is why the commit needs no txn stamp.
 
-    ``net``: optionally the precomputed (and persisted)
-    ``_net_actions(batch_df, key)`` relation — run_stream_matview
-    passes one shared net to both the view and apply halves so the
-    per-batch window shuffle runs once; the caller owns its
-    persistence."""
+    ``net``: optionally the batch's net actions, as the runners pass
+    them (``_change_batch``); otherwise the window computes them."""
     from mc_ns_data_pipeline_spark.sinks import versioned as V
 
-    meta = ("_change_type", "_commit_gen", "_rn")
-    own_net = net is None
-    if own_net:
+    if net is None:
         net = _net_actions(batch_df, key)
-        net.persist()
-    try:
-        dels = net.filter(F.col("_change_type") == "delete") \
-                  .select(key)
-        ups = net.filter(F.col("_change_type") == "insert") \
-                 .drop(*meta)
-        # one probe job over the persisted net, not one per side
-        kinds = {r["_change_type"]: r["n"] for r in
-                 net.groupBy("_change_type")
-                 .agg(F.count("*").alias("n")).collect()}
-        # a pre-r11 (two-commit) crash may have left a staged branch
-        # under this batch's name: drop it — this apply supersedes it
-        if branch in V.list_refs(replica):
-            V.delete_ref(replica, branch)
-        if kinds.get("insert"):
-            V.merge_snapshot_mor(
-                spark, ups, replica, key,
-                extra_mask_keys=(dels if kinds.get("delete")
-                                 else None))
-        elif kinds.get("delete"):
-            V.delete_keys_mor(spark, replica, key, dels)
-    finally:
-        if own_net:
-            net.unpersist()
+    dels = net.filter(F.col("_change_type") == "delete").select(key)
+    ups = net.filter(F.col("_change_type") == "insert").drop(*_META)
+    # a pre-r11 (two-commit) crash may have left a staged branch
+    # under this batch's name: drop it — this apply supersedes it
+    if branch in V.list_refs(replica):
+        V.delete_ref(replica, branch)
+    if not ups.isEmpty():
+        V.merge_snapshot_mor(
+            spark, ups, replica, key,
+            extra_mask_keys=None if dels.isEmpty() else dels)
+    elif not dels.isEmpty():
+        V.delete_keys_mor(spark, replica, key, dels)
 
 
-def _drain_change_feed(spark: SparkSession, source: str,
-                       checkpoint_dir: str, apply_fn,
-                       starting: str,
-                       max_commits_per_trigger: int,
-                       max_files_per_trigger: int) -> None:
-    """Run a change-feed → foreachBatch consumer to COMPLETION under
-    admission control. ``Trigger.AvailableNow`` captures the first
-    offer as the run end (no per-batch admission hook in the Python
-    datasource API — table_source.py module header), so a capped run
-    admits exactly ONE bounded batch; this helper loops availableNow
-    runs until the stream's COMMITTED offset reaches the source head,
-    i.e. a backlog of N commits drains as ⌈N/cap⌉ checkpointed runs
-    of one bounded batch each. Every run is its own exactly-once
-    checkpointed lifecycle: a kill mid-drain resumes from the last
-    committed batch. Uncapped, the first run admits everything and
-    the loop exits after one caught-up check (metadata-only — no
-    second lifecycle is paid)."""
+def _change_batch(spark: SparkSession, source: str, start: str,
+                  end: str, schema: StructType, key: str
+                  ) -> tuple[DataFrame, DataFrame]:
+    """The change-feed batch (start, end] of ``source`` and its net
+    actions. When the planned slices' files fit
+    ``_DRIVER_LAND_BYTES`` and the key type groups exactly on the
+    driver (``_mask_type_ok``), both are computed there
+    (``_read_slice``, ``_net_rows``) and returned as LocalTableScans:
+    no Spark job and no Python worker. Otherwise Spark tasks read the
+    slices (``read_change_batch``) and the window nets them, persisted
+    because the view and the apply each read the net; the caller
+    unpersists it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+
     from mc_ns_data_pipeline_spark.sinks import versioned as V
     from mc_ns_data_pipeline_spark.streaming import table_source as TS
 
-    prev = TS.committed_end_offset(checkpoint_dir)
+    slices = TS._plan_slices(source, start, end, schema.json(), 1,
+                             changes=True)
+    size = sum(os.path.getsize(p) for sl in slices for p in sl.paths)
+    if (size <= V._DRIVER_LAND_BYTES
+            and V._mask_type_ok(to_arrow_type(schema[key].dataType))):
+        # one chunk: createDataFrame drops the rows after an empty chunk
+        tbl = pa.concat_tables(
+            [to_arrow_schema(schema).empty_table(),
+             *(t for sl in slices for t in TS._read_slice(sl))]
+        ).combine_chunks()
+        return (spark.createDataFrame(tbl, schema),
+                spark.createDataFrame(_net_rows(tbl, key), schema))
+    batch = TS.read_change_batch(spark, source, start, end, schema)
+    return batch, _net_actions(batch, key).persist()
+
+
+#: The drain cursor's file under a runner's ``checkpoint_dir``.
+_CURSOR = "drain_cursor.json"
+
+
+def _drain_changes(spark: SparkSession, source: str,
+                   checkpoint_dir: str, key: str, starting: str,
+                   max_commits: int, max_files: int,
+                   apply_fn, on_batch) -> None:
+    """Drain ``source``'s change feed up to the head seen at call
+    time, one bounded batch at a time, on the driver: the CDC
+    runners' loop. ``apply_fn(batch_id, batch_df, net)`` applies a
+    batch; ``on_batch`` as in ``run_stream_apply_changes``.
+
+    Exactly-once rests on a write-ahead cursor, one JSON file
+    (``{"batch", "start", "end", "committed"}``) under
+    ``checkpoint_dir``, rewritten atomically: a batch's id and bounds
+    are recorded before it is applied, and marked committed after.
+    A planned but uncommitted batch (a crash) is replayed first with
+    its recorded id and bounds, whatever the caps of the call —
+    Spark's ``offsets/`` + ``commits/`` protocol in one file. The
+    first call records its start even when there is nothing to
+    apply, so a later call never starts past commits made between
+    them. A checkpoint that still holds Spark's logs from the
+    Structured Streaming runner is adopted (``_legacy_cursor``).
+
+    Batches are planned from manifests alone (``_bounded_end`` under
+    the caps, ``_plan_slices``) and read by ``_change_batch``."""
+    import time
+
+    from mc_ns_data_pipeline_spark.sinks import versioned as V
+    from mc_ns_data_pipeline_spark.streaming import table_source as TS
+
+    schema = TS._feed_schema(source, changes=True)
+    head = V.current_snapshot(source)
+    path = os.path.join(checkpoint_dir, _CURSOR)
+    try:
+        with open(path) as fh:
+            cur = json.load(fh)
+    except FileNotFoundError:
+        cur = TS._legacy_cursor(checkpoint_dir, source, starting)
+        if cur is None:
+            at = TS._start_offset(source, starting)
+            cur = {"batch": -1, "start": at, "end": at,
+                   "committed": True}
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        V._atomic_write_json(path, cur)
+    memo: dict[str, dict] = {}
     while True:
-        feed = TS.read_stream_changes(
-            spark, source, starting=starting,
-            max_commits_per_trigger=max_commits_per_trigger,
-            max_files_per_trigger=max_files_per_trigger,
-            checkpoint=checkpoint_dir)
-        q = (feed.writeStream
-             .foreachBatch(apply_fn)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-        end = TS.committed_end_offset(checkpoint_dir)
-        if end is None or end == prev:
-            break  # nothing admitted — source had no new commits
-        prev = end
-        if end == V.current_snapshot(source):
-            break  # caught up to the head
+        if cur["committed"]:
+            if cur["end"] == head:
+                return
+            end = (TS._bounded_end(source, cur["end"], head,
+                                   max_commits, max_files, memo)
+                   if max_commits or max_files else head)
+            cur = {"batch": cur["batch"] + 1, "start": cur["end"],
+                   "end": end, "committed": False}
+            V._atomic_write_json(path, cur)
+        t0 = time.perf_counter()
+        batch, net = _change_batch(spark, source, cur["start"],
+                                   cur["end"], schema, key)
+        try:
+            apply_fn(cur["batch"], batch, net)
+            if on_batch is not None:
+                on_batch(cur["batch"], time.perf_counter() - t0, batch)
+        finally:
+            net.unpersist()
+        cur = {**cur, "committed": True}
+        V._atomic_write_json(path, cur)
 
 
 def run_stream_apply_changes(spark: SparkSession, source: str,
@@ -1358,10 +1431,10 @@ def run_stream_apply_changes(spark: SparkSession, source: str,
                              max_files_per_trigger: int = 0,
                              on_batch=None) -> None:
     """Materialize a versioned table's CHANGE FEED onto a replica
-    versioned table, exactly-once: ``read_stream_changes(source)`` →
-    foreachBatch ``apply_change_batch`` — net state on the replica
-    equals the source after every committed batch, across restarts
-    and interleaved append/upsert/delete commits
+    versioned table, exactly-once: each batch of change events goes
+    through ``apply_change_batch`` — net state on the replica equals
+    the source after every committed batch, across restarts and
+    interleaved append/upsert/delete commits
     (tests/test_streaming_cdc_apply.py).
 
     Contract: initialize the replica to the source snapshot named by
@@ -1371,27 +1444,29 @@ def run_stream_apply_changes(spark: SparkSession, source: str,
     backlog available at call time to completion before returning;
     share ``checkpoint_dir`` across calls to resume.
 
+    The drain is a driver loop (``_drain_changes``), not a streaming
+    query: each batch is planned from manifests, recorded in a
+    write-ahead cursor under ``checkpoint_dir``, applied, then marked
+    committed, so a kill mid-drain replays at most the one recorded
+    batch (unit-idempotent) and resumes. A batch whose files fit the
+    driver budget is read and netted on the driver and reaches the
+    apply as a LocalTableScan; a larger one is read by Spark tasks.
+
     ``max_commits_per_trigger`` / ``max_files_per_trigger`` (0 =
-    unbounded) bound each micro-batch's admitted lineage — the scale
-    lever for a replica that fell far behind: the per-batch net
-    window, the staged delete/upsert sides, and (in the matview
-    variant) the touched-key IN list are all O(batch events),
-    which is only a bound if the feed is capped. Because
-    Trigger.AvailableNow admits exactly ONE bounded batch per run,
-    capped drains loop availableNow runs until the committed offset
-    reaches the source head — ⌈N/cap⌉ checkpointed runs, each its
-    own exactly-once lifecycle (_drain_change_feed); a kill
-    mid-drain resumes from the last committed batch
-    (scripts/stress_cdc_apply.py proves both through this public
-    runner). Uncapped calls pay exactly one lifecycle, as before.
+    unbounded) bound each batch's admitted lineage — the scale lever
+    for a replica that fell far behind: the per-batch net, the
+    staged delete/upsert sides, and (in the matview variant) the
+    touched-key IN list are all O(batch events), which is only a
+    bound if the feed is capped. A backlog of N commits drains as
+    ⌈N/cap⌉ batches in one call (scripts/stress_cdc_apply.py proves
+    the drain and its kill/resume through this public runner).
 
     ``on_batch`` (optional ``callable(batch_id, seconds,
-    batch_df)``) fires driver-side after each applied batch with the
-    batch's apply time and the batch DataFrame (still valid inside
-    the foreachBatch scope) — drain instrumentation and feed
-    witnesses (xs18 counts raw change events through it). At-least-
-    once under crash replay, like the batch itself; leave None in
-    production.
+    batch_df)``) fires driver-side after each applied batch, before
+    its cursor commit, with the batch's read-and-apply time and the
+    batch DataFrame — drain instrumentation and feed witnesses (xs18
+    counts raw change events through it). At-least-once under crash
+    replay, like the batch itself; leave None in production.
 
     ``maintenance_every``: every N batches, run ``optimize_table`` on
     the replica (threshold-gated — a no-op when small files and
@@ -1403,23 +1478,18 @@ def run_stream_apply_changes(spark: SparkSession, source: str,
     scripts/stress_cdc_apply.py). Maintenance commits are
     row-preserving compactions, so they never produce change events
     for downstream consumers of the replica itself."""
-    import time
-
     from mc_ns_data_pipeline_spark.sinks import versioned as V
 
-    def _apply(b, bid):
-        t0 = time.perf_counter()
-        apply_change_batch(spark, b, replica, key,
-                           f"{app_id}-{bid}")
+    def _apply(bid, batch, net):
+        apply_change_batch(spark, batch, replica, key,
+                           f"{app_id}-{bid}", net=net)
         if maintenance_every and bid % maintenance_every == (
                 maintenance_every - 1):
             V.optimize_table(spark, replica)
-        if on_batch is not None:
-            on_batch(bid, time.perf_counter() - t0, b)
 
-    _drain_change_feed(spark, source, checkpoint_dir, _apply,
-                       starting, max_commits_per_trigger,
-                       max_files_per_trigger)
+    _drain_changes(spark, source, checkpoint_dir, key, starting,
+                   max_commits_per_trigger, max_files_per_trigger,
+                   _apply, on_batch)
 
 
 def matview_delta_batch(spark: SparkSession, batch_df: DataFrame,
@@ -1435,8 +1505,8 @@ def matview_delta_batch(spark: SparkSession, batch_df: DataFrame,
     state (which this consumer also maintains — apply AFTER the view
     update, see ordering below).
 
-    Crash/replay contract (Spark replays the one batch a crash can
-    leave uncommitted):
+    Crash/replay contract (the runners replay the one batch a crash
+    can leave uncommitted):
     1. compute the net batch actions and the group DELTAS against the
        replica's PRE-batch state;
     2. read-modify-write the view, committed with ``txn_id`` — a
@@ -1447,7 +1517,7 @@ def matview_delta_batch(spark: SparkSession, batch_df: DataFrame,
     Replay after a crash before step 3 completed (including between
     2 and 3) recomputes the SAME delta — the replica has not moved;
     the stamp then skips the already-committed view merge. Replay
-    after step 3 completed but before the checkpoint commit
+    after step 3 completed but before the cursor commit
     recomputes a STALE delta (the replica moved), and the stamp
     discards it. Groups whose count reaches zero stay in the view
     with n=0 (no delete commit needed; re-inserts revive them).
@@ -1462,30 +1532,21 @@ def matview_delta_batch(spark: SparkSession, batch_df: DataFrame,
     in Spark (``_view_delta_spark``: broadcast left-semis, a
     full-outer join with the view).
 
-    ``net``: optionally the precomputed (and persisted)
-    ``_net_actions(batch_df, key)`` relation — run_stream_matview
-    shares one net between this and apply_change_batch so the
-    per-batch window shuffle runs once; the caller owns its
-    persistence."""
+    ``net``: optionally the batch's net actions — run_stream_matview
+    passes this and apply_change_batch the same net; otherwise the
+    window computes them."""
     from mc_ns_data_pipeline_spark.sinks import versioned as V
 
-    own_net = net is None
-    if own_net:
+    if net is None:
         net = _net_actions(batch_df, key)
-        net.persist()
-    try:
-        args = (spark, net, replica, view, key, group_col, value_col)
-        new = _view_delta_local(*args)
-        if new is None:
-            new = _view_delta_spark(*args)
-        if V.current_snapshot(view) is None:
-            V.write_snapshot(new, view, txn_id=txn_id)
-        else:
-            V.merge_snapshot_mor(spark, new, view, "g",
-                                 txn_id=txn_id)
-    finally:
-        if own_net:
-            net.unpersist()
+    args = (spark, net, replica, view, key, group_col, value_col)
+    new = _view_delta_local(*args)
+    if new is None:
+        new = _view_delta_spark(*args)
+    if V.current_snapshot(view) is None:
+        V.write_snapshot(new, view, txn_id=txn_id)
+    else:
+        V.merge_snapshot_mor(spark, new, view, "g", txn_id=txn_id)
 
 
 #: The one decimal type view sums are kept in, on both engines, and
@@ -1585,8 +1646,7 @@ def _view_delta_spark(spark: SparkSession, net: DataFrame,
     changed groups kept."""
     from mc_ns_data_pipeline_spark.sinks import versioned as V
 
-    meta = ("_change_type", "_commit_gen", "_rn")
-    ups = net.filter(F.col("_change_type") == "insert").drop(*meta)
+    ups = net.filter(F.col("_change_type") == "insert").drop(*_META)
     pre = (V.read_current(spark, replica)
            .join(F.broadcast(net.select(key)), key, "left_semi")
            .select(F.col(group_col).alias("g"),
@@ -1655,110 +1715,100 @@ def matview_minmax_batch(spark: SparkSession, batch_df: DataFrame,
     is laid out by ``group_col`` (set_partition_spec). Nothing is
     rewritten; the view merge touches only changed groups.
 
-    ``net``: as in matview_delta_batch — pass the persisted
-    ``_net_actions`` relation to share the per-batch window shuffle
-    with apply_change_batch."""
+    ``net``: as in matview_delta_batch."""
     from mc_ns_data_pipeline_spark.sinks import versioned as V
 
-    meta = ("_change_type", "_commit_gen", "_rn")
-    own_net = net is None
-    if own_net:
+    if net is None:
         net = _net_actions(batch_df, key)
-        net.persist()
+    ups = net.filter(F.col("_change_type") == "insert").drop(*_META)
+    keys = net.select(key)
+    pre_all = V.read_current(spark, replica)
+    pre_hit = (pre_all
+               .join(F.broadcast(keys), key, "left_semi")
+               .persist())  # O(batch keys) rows, read twice
     try:
-        ups = net.filter(F.col("_change_type") == "insert") \
-                 .drop(*meta)
-        keys = net.select(key)
-        pre_all = V.read_current(spark, replica)
-        pre_hit = (pre_all
-                   .join(F.broadcast(keys), key, "left_semi")
-                   .persist())  # O(batch keys) rows, read twice
-        try:
-            # count/sum deltas: every touched key retracts its
-            # pre-batch contribution, every net insert adds its own.
-            retr = pre_hit.select(F.col(group_col).alias("g"),
-                                  F.lit(-1).alias("dn"),
-                                  (-F.col(value_col)).alias("dv"))
-            add = ups.select(F.col(group_col).alias("g"),
-                             F.lit(1).alias("dn"),
-                             F.col(value_col).alias("dv"))
-            delta = (retr.unionByName(add)
-                     .groupBy("g")
-                     .agg(F.sum("dn").cast("long").alias("dn"),
-                          F.sum(F.col("dv").cast("decimal(18,4)"))
-                           .alias("dv")))
-            # losing side: groups whose pre-batch row is removed or
-            # replaced — any of them may have carried the extremum.
-            rgroups = (pre_hit.select(F.col(group_col).alias("g"))
-                       .distinct())
-            rg_k = rgroups.withColumnRenamed("g", group_col)
-            post_r = (pre_all
-                      .join(F.broadcast(rg_k), group_col,
-                            "left_semi")
-                      .join(F.broadcast(keys), key, "left_anti")
-                      .select(group_col, value_col)
-                      .unionByName(
-                          ups.join(F.broadcast(rg_k), group_col,
-                                   "left_semi")
-                          .select(group_col, value_col)))
-            rec = (post_r.groupBy(F.col(group_col).alias("g"))
-                   .agg(F.min(F.col(value_col).cast("double"))
-                        .alias("r_min"),
-                        F.max(F.col(value_col).cast("double"))
-                        .alias("r_max")))
-            # gaining side: the batch's own bounds, merged
-            # monotonically into groups that lost nothing.
-            mono = (ups.join(F.broadcast(rg_k), group_col,
-                             "left_anti")
-                    .groupBy(F.col(group_col).alias("g"))
-                    .agg(F.min(F.col(value_col).cast("double"))
-                         .alias("b_min"),
-                         F.max(F.col(value_col).cast("double"))
-                         .alias("b_max")))
-            upd = (delta
-                   .join(rgroups.withColumn("is_r", F.lit(True)),
-                         "g", "left")
-                   .join(rec, "g", "left")
-                   .join(mono, "g", "left"))
-            cur = (V.read_current(spark, view) if
-                   V.current_snapshot(view) is not None else
-                   spark.createDataFrame(
-                       [],
-                       f"g {delta.schema['g'].dataType.simpleString()}"
-                       ", n long, sum_value decimal(18,4)"
-                       ", min_value double, max_value double"))
-            is_r = F.coalesce(F.col("is_r"), F.lit(False))
-            # least/greatest skip NULLs (both engines), so a revived
-            # n=0 group (old bounds NULL) takes the batch bound.
-            new = (upd.join(cur, "g", "full_outer")
-                   .select(
-                       "g",
-                       (F.coalesce(F.col("n"), F.lit(0))
-                        + F.coalesce(F.col("dn"), F.lit(0)))
-                       .cast("long").alias("n"),
-                       (F.coalesce(F.col("sum_value"),
-                                   F.lit(0).cast("decimal(18,4)"))
-                        + F.coalesce(F.col("dv"),
-                                     F.lit(0).cast("decimal(18,4)")))
-                       .cast("decimal(18,4)").alias("sum_value"),
-                       F.when(is_r, F.col("r_min"))
-                       .otherwise(F.least("min_value", "b_min"))
-                       .cast("double").alias("min_value"),
-                       F.when(is_r, F.col("r_max"))
-                       .otherwise(F.greatest("max_value", "b_max"))
-                       .cast("double").alias("max_value"))
-                   .join(F.broadcast(delta.select("g")), "g",
-                         "left_semi"))  # touch only changed groups
-            if V.current_snapshot(view) is None:
-                V.write_snapshot(new, view, txn_id=txn_id)
-            else:
-                V.merge_snapshot_mor(spark, new, view, "g",
-                                     txn_id=txn_id)
-        finally:
-            pre_hit.unpersist()
+        # count/sum deltas: every touched key retracts its
+        # pre-batch contribution, every net insert adds its own.
+        retr = pre_hit.select(F.col(group_col).alias("g"),
+                              F.lit(-1).alias("dn"),
+                              (-F.col(value_col)).alias("dv"))
+        add = ups.select(F.col(group_col).alias("g"),
+                         F.lit(1).alias("dn"),
+                         F.col(value_col).alias("dv"))
+        delta = (retr.unionByName(add)
+                 .groupBy("g")
+                 .agg(F.sum("dn").cast("long").alias("dn"),
+                      F.sum(F.col("dv").cast("decimal(18,4)"))
+                       .alias("dv")))
+        # losing side: groups whose pre-batch row is removed or
+        # replaced — any of them may have carried the extremum.
+        rgroups = (pre_hit.select(F.col(group_col).alias("g"))
+                   .distinct())
+        rg_k = rgroups.withColumnRenamed("g", group_col)
+        post_r = (pre_all
+                  .join(F.broadcast(rg_k), group_col,
+                        "left_semi")
+                  .join(F.broadcast(keys), key, "left_anti")
+                  .select(group_col, value_col)
+                  .unionByName(
+                      ups.join(F.broadcast(rg_k), group_col,
+                               "left_semi")
+                      .select(group_col, value_col)))
+        rec = (post_r.groupBy(F.col(group_col).alias("g"))
+               .agg(F.min(F.col(value_col).cast("double"))
+                    .alias("r_min"),
+                    F.max(F.col(value_col).cast("double"))
+                    .alias("r_max")))
+        # gaining side: the batch's own bounds, merged
+        # monotonically into groups that lost nothing.
+        mono = (ups.join(F.broadcast(rg_k), group_col,
+                         "left_anti")
+                .groupBy(F.col(group_col).alias("g"))
+                .agg(F.min(F.col(value_col).cast("double"))
+                     .alias("b_min"),
+                     F.max(F.col(value_col).cast("double"))
+                     .alias("b_max")))
+        upd = (delta
+               .join(rgroups.withColumn("is_r", F.lit(True)),
+                     "g", "left")
+               .join(rec, "g", "left")
+               .join(mono, "g", "left"))
+        cur = (V.read_current(spark, view) if
+               V.current_snapshot(view) is not None else
+               spark.createDataFrame(
+                   [],
+                   f"g {delta.schema['g'].dataType.simpleString()}"
+                   ", n long, sum_value decimal(18,4)"
+                   ", min_value double, max_value double"))
+        is_r = F.coalesce(F.col("is_r"), F.lit(False))
+        # least/greatest skip NULLs (both engines), so a revived
+        # n=0 group (old bounds NULL) takes the batch bound.
+        new = (upd.join(cur, "g", "full_outer")
+               .select(
+                   "g",
+                   (F.coalesce(F.col("n"), F.lit(0))
+                    + F.coalesce(F.col("dn"), F.lit(0)))
+                   .cast("long").alias("n"),
+                   (F.coalesce(F.col("sum_value"),
+                               F.lit(0).cast("decimal(18,4)"))
+                    + F.coalesce(F.col("dv"),
+                                 F.lit(0).cast("decimal(18,4)")))
+                   .cast("decimal(18,4)").alias("sum_value"),
+                   F.when(is_r, F.col("r_min"))
+                   .otherwise(F.least("min_value", "b_min"))
+                   .cast("double").alias("min_value"),
+                   F.when(is_r, F.col("r_max"))
+                   .otherwise(F.greatest("max_value", "b_max"))
+                   .cast("double").alias("max_value"))
+               .join(F.broadcast(delta.select("g")), "g",
+                     "left_semi"))  # touch only changed groups
+        if V.current_snapshot(view) is None:
+            V.write_snapshot(new, view, txn_id=txn_id)
+        else:
+            V.merge_snapshot_mor(spark, new, view, "g",
+                                 txn_id=txn_id)
     finally:
-        if own_net:
-            net.unpersist()
+        pre_hit.unpersist()
 
 
 def run_stream_matview(spark: SparkSession, source: str,
@@ -1780,8 +1830,8 @@ def run_stream_matview(spark: SparkSession, source: str,
     including through MOR deletes (the replica supplies retracted
     values the key-only delete events lack). Initialize the replica
     to the source snapshot at ``starting``; an unwritten view is
-    seeded here, before the stream starts, as the aggregate of that
-    initial copy (deltas alone can't reconstruct the pre-stream
+    seeded here, before the first batch, as the aggregate of that
+    initial copy (deltas alone can't reconstruct the pre-feed
     contribution).
 
     ``minmax=True`` widens the view with min_value/max_value — the
@@ -1799,12 +1849,11 @@ def run_stream_matview(spark: SparkSession, source: str,
     keys)" is only a BOUND when the feed is capped: set
     ``max_commits_per_trigger`` / ``max_files_per_trigger`` so a
     consumer that fell a week behind collects the capped key set per
-    batch, never the whole backlog's. Admission, drain-to-completion, kill/resume, and
-    ``on_batch`` semantics match ``run_stream_apply_changes``
-    (capped availableNow runs loop until caught up —
-    ``_drain_change_feed``)."""
-    import time
-
+    batch, never the whole backlog's. Admission, drain-to-completion,
+    kill/resume, the driver-or-Spark batch read and ``on_batch``
+    semantics match ``run_stream_apply_changes`` (``_drain_changes``):
+    per batch, the view commit under its txn stamp, then the replica
+    apply, then the cursor commit."""
     from mc_ns_data_pipeline_spark.sinks import versioned as V
 
     if V.current_snapshot(view) is None:
@@ -1824,27 +1873,16 @@ def run_stream_matview(spark: SparkSession, source: str,
 
     view_batch = matview_minmax_batch if minmax else matview_delta_batch
 
-    def _apply(b, bid):
-        t0 = time.perf_counter()
-        b.persist()
-        net = _net_actions(b, key)
-        net.persist()  # one window shuffle shared by both halves
-        try:
-            view_batch(spark, b, replica, view, key,
-                       group_col, value_col,
-                       f"{app_id}:view:{bid}", net=net)
-            apply_change_batch(spark, b, replica, key,
-                               f"{app_id}-{bid}", net=net)
-        finally:
-            net.unpersist()
-            b.unpersist()
+    def _apply(bid, batch, net):
+        view_batch(spark, batch, replica, view, key, group_col,
+                   value_col, f"{app_id}:view:{bid}", net=net)
+        apply_change_batch(spark, batch, replica, key,
+                           f"{app_id}-{bid}", net=net)
         if maintenance_every and bid % maintenance_every == (
                 maintenance_every - 1):
             V.optimize_table(spark, replica)
             V.optimize_table(spark, view)
-        if on_batch is not None:
-            on_batch(bid, time.perf_counter() - t0, b)
 
-    _drain_change_feed(spark, source, checkpoint_dir, _apply,
-                       starting, max_commits_per_trigger,
-                       max_files_per_trigger)
+    _drain_changes(spark, source, checkpoint_dir, key, starting,
+                   max_commits_per_trigger, max_files_per_trigger,
+                   _apply, on_batch)

@@ -45,8 +45,12 @@ Semantics (all verified in tests/test_table_source.py):
   captures the FIRST offer as the run end (no per-batch admission
   hook in the Python datasource API), so a capped availableNow run
   admits exactly ONE bounded batch and terminates with backlog
-  remaining — loop such runs until caught up (the public CDC
-  runners in streaming/incremental.py do exactly this).
+  remaining — loop such runs until caught up. The public CDC
+  runners (streaming/incremental.py) start no stream at all: they
+  plan the same bounded batches (``_bounded_end``, ``_plan_slices``)
+  in a driver loop with a write-ahead cursor, and read each batch
+  with the same per-file read (``_read_slice``) on the driver, or
+  through this datasource's batch reader past the driver budget.
 * **Frozen schema.** The stream's schema is pinned at definition
   time (Spark streaming requires a static schema); later additive
   evolutions project away mid-stream (new columns are dropped until
@@ -69,6 +73,7 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -268,9 +273,9 @@ def committed_end_offset(checkpoint: str) -> str | None:
     a stream's checkpoint — unlike ``_floor_from_offset_log`` this
     consults ``commits/`` first, so a planned-but-uncommitted batch
     (a crash the next run will replay) is not counted as progress.
-    The public CDC runners use this to decide a capped availableNow
-    drain loop is caught up (one bounded batch per run — module
-    header). Returns None when no batch has committed."""
+    The CDC runners adopt a checkpoint the Structured Streaming
+    runner left through it (``_legacy_cursor``). Returns None when no
+    batch has committed."""
     c = os.path.join(checkpoint, "commits")
     try:
         batches = [int(f) for f in os.listdir(c) if f.isdigit()]
@@ -280,6 +285,54 @@ def committed_end_offset(checkpoint: str) -> str | None:
         return None
     return _offset_file_snapshot(
         os.path.join(checkpoint, "offsets", str(max(batches))))
+
+
+class LegacyCheckpointError(RuntimeError):
+    """A CDC runner checkpoint holds Structured Streaming offset and
+    commit logs whose position cannot be read back exactly."""
+
+
+def _legacy_cursor(checkpoint: str, table: str,
+                   starting: str) -> dict | None:
+    """The drain cursor (``{"batch", "start", "end", "committed"}``)
+    equivalent to the Structured Streaming ``offsets/`` + ``commits/``
+    logs an earlier CDC runner left in ``checkpoint``, or None when no
+    batch was ever planned there. The committed end is
+    ``committed_end_offset``; a planned-but-uncommitted batch is
+    replayed with its logged id and bounds, its start being the end
+    of the batch before it. Spark logs no start for batch 0: it is
+    re-derived from ``starting``, as Spark's own replay does, except
+    for ``"current"``, whose position has moved since — that refuses
+    with LegacyCheckpointError rather than skip the batch."""
+    def ids(sub: str) -> list[int]:
+        try:
+            return sorted(int(f) for f in
+                          os.listdir(os.path.join(checkpoint, sub))
+                          if f.isdigit())
+        except OSError:
+            return []
+
+    planned, done = ids("offsets"), ids("commits")
+    if not planned:
+        return None
+    last = planned[-1]
+    committed = bool(done) and done[-1] >= last
+    end = _offset_file_snapshot(
+        os.path.join(checkpoint, "offsets", str(last)))
+    if committed or last > 0:
+        start = committed_end_offset(checkpoint)
+    elif starting == "current":
+        raise LegacyCheckpointError(
+            f"{checkpoint}: batch 0 was planned but never committed, "
+            "and Spark logged no start for it; rerun with the "
+            "snapshot id the stream started from as `starting`")
+    else:
+        start = _start_offset(table, starting)
+    if end is None or start is None:
+        raise LegacyCheckpointError(
+            f"{checkpoint}: unreadable offset log for batch {last}")
+    return {"batch": last, "start": start, "end": end,
+            "committed": committed}
 
 
 _BOOT_OK_OPS = ("append", "compact", "set-spec")
@@ -353,6 +406,128 @@ def _bounded_end(table: str, floor: str, head: str,
     return end
 
 
+def _start_offset(table: str, starting: str) -> str:
+    """The consumer position ``starting`` names: the genesis sentinel,
+    the current snapshot, or an explicit snapshot id (exclusive)."""
+    from mc_ns_data_pipeline_spark.sinks import versioned as V
+
+    if starting == "genesis":
+        return _GENESIS
+    if starting == "current":
+        cur = V.current_snapshot(table)
+        if cur is None:
+            raise V.NoCurrentSnapshotError(table)
+        return cur
+    return starting
+
+
+def _plan_slices(table: str, start: str, end: str, schema_json: str,
+                 per_part: int, changes: bool) -> list[_FileSlice]:
+    """The input slices of the batch (start, end] — metadata only.
+    Append mode: the append commits' pool files, or at genesis the
+    snapshot's full file list. Changes mode: `_change_slices_between`,
+    or at genesis every live row as an insert event at its file's
+    recorded generation."""
+    from mc_ns_data_pipeline_spark.sinks import versioned as V
+
+    end_core = V._read_core(table, end)
+    renames = end_core.get("renames")
+    if changes and start != _GENESIS:
+        return _change_slices_between(table, start, end, schema_json,
+                                      renames, per_part)
+    root = V._data_root(table)
+    if start == _GENESIS:
+        man = V._materialize(table, end_core)
+        files = _bootstrap_files(table, end, end_core)
+        if changes:
+            seq = man.get("file_seq") or {}
+            out = []
+            for i in range(0, len(files), per_part):
+                part = files[i:i + per_part]
+                out.append(_FileSlice(
+                    [f if os.path.isabs(f) else os.path.join(root, f)
+                     for f in part],
+                    schema_json, renames, kind="insert",
+                    gens=[int(seq.get(f, 0)) for f in part]))
+            return out
+    else:
+        files = _append_files_between(table, start, end)
+    paths = [f if os.path.isabs(f) else os.path.join(root, f)
+             for f in files]
+    return [_FileSlice(paths[i:i + per_part], schema_json, renames)
+            for i in range(0, len(paths), per_part)]
+
+
+def _read_slice(partition: _FileSlice) -> Iterator:
+    """One slice's rows as pyarrow tables, one per file, under the
+    slice's schema: the per-file read every consumer of the feed runs
+    (stream tasks, batch tasks and the CDC runners' driver loop)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    want = to_arrow_schema(
+        StructType.fromJson(json.loads(partition.schema_json)))
+    meta = {_CHANGE_TYPE, _COMMIT_GEN}
+    data_fields = [f for f in want if f.name not in meta]
+    chains = {f.name: [f.name, *partition.renames.get(f.name, ())]
+              for f in data_fields}
+    for idx, path in enumerate(partition.paths):
+        tbl = pq.read_table(path)
+        cols = []
+        for field in data_fields:
+            # a file carries exactly one name of a rename chain
+            # (retirement forbids reuse) — first present wins;
+            # delete slices carry ONLY their key column, so every
+            # other field projects NULL by the same rule
+            have = next((c for c in chains[field.name]
+                         if c in tbl.column_names), None)
+            if (partition.kind == "delete"
+                    and have is not None
+                    and partition.key not in chains[field.name]):
+                have = None  # stray column in a delete file
+            if have is not None:
+                col = tbl.column(have)
+                if col.type != field.type:
+                    col = col.cast(field.type)
+            else:  # pre-evolution file: later-added column -> NULL
+                col = pa.nulls(tbl.num_rows, type=field.type)
+            cols.append(col)
+        names = [f.name for f in data_fields]
+        if partition.kind != "row":
+            gen = partition.gens[idx]
+            cols.append(pa.array([partition.kind] * tbl.num_rows,
+                                 type=pa.string()))
+            cols.append(pa.array([gen] * tbl.num_rows,
+                                 type=pa.int64()))
+            names += [_CHANGE_TYPE, _COMMIT_GEN]
+        yield pa.table(dict(zip(names, cols))).cast(pa.schema(want))
+
+
+def _feed_schema(table: str, changes: bool) -> StructType:
+    """The feed's schema: the table's current recorded schema, plus
+    the two CDC meta columns in changes mode."""
+    from mc_ns_data_pipeline_spark.sinks import versioned as V
+
+    cur = V.current_snapshot(table)
+    if cur is None:
+        raise V.NoCurrentSnapshotError(table)
+    schema = V.table_schema(table, cur)
+    if schema is None:
+        raise ValueError(
+            f"{table}: snapshot {cur} predates schema stamping — "
+            "pass an explicit .schema(...) to readStream")
+    if changes:
+        from pyspark.sql.types import LongType, StringType
+        from pyspark.sql.types import StructField as SF
+
+        schema = StructType(
+            list(schema.fields)
+            + [SF(_CHANGE_TYPE, StringType(), False),
+               SF(_COMMIT_GEN, LongType(), False)])
+    return schema
+
+
 class VersionedTableStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict[str, str]):
         self._table = options["table"]
@@ -377,20 +552,8 @@ class VersionedTableStreamReader(DataSourceStreamReader):
     # -- offsets --------------------------------------------------------
     def initialOffset(self) -> dict:
         _ensure_importable(self._pkg_parent)
-        from mc_ns_data_pipeline_spark.sinks import versioned as V
-
-        if self._starting == "genesis":
-            self._floor = _GENESIS
-            return {"snapshot": _GENESIS}
-        if self._starting == "current":
-            cur = V.current_snapshot(self._table)
-            if cur is None:
-                raise V.NoCurrentSnapshotError(self._table)
-            self._floor = cur
-            return {"snapshot": cur}
-        # explicit snapshot id (exclusive): stream emits appends AFTER it
-        self._floor = self._starting
-        return {"snapshot": self._starting}
+        self._floor = _start_offset(self._table, self._starting)
+        return {"snapshot": self._floor}
 
     def latestOffset(self) -> dict:
         _ensure_importable(self._pkg_parent)
@@ -420,8 +583,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict
                    ) -> Sequence[InputPartition]:
         _ensure_importable(self._pkg_parent)
-        from mc_ns_data_pipeline_spark.sinks import versioned as V
-
         s, e = start["snapshot"], end["snapshot"]
         # the planned batch end is the authoritative consumer
         # position — the next latestOffset offer caps from here (and
@@ -429,83 +590,13 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         self._floor = e
         if s == e:
             return []
-        end_core = V._read_core(self._table, e)
-        renames = end_core.get("renames")
-        k = self._per_part
-        if self._changes and s != _GENESIS:
-            return _change_slices_between(
-                self._table, s, e, self._schema_json, renames, k)
-        root = V._data_root(self._table)
-        if s == _GENESIS:
-            man = V._materialize(self._table, end_core)
-            files = _bootstrap_files(self._table, e, end_core)
-            if self._changes:
-                # bootstrap = every live row as an insert event at
-                # its file's recorded generation
-                seq = man.get("file_seq") or {}
-                out = []
-                for i in range(0, len(files), k):
-                    part = files[i:i + k]
-                    out.append(_FileSlice(
-                        [f if os.path.isabs(f)
-                         else os.path.join(root, f) for f in part],
-                        self._schema_json, renames, kind="insert",
-                        gens=[int(seq.get(f, 0)) for f in part]))
-                return out
-        else:
-            files = _append_files_between(self._table, s, e)
-        paths = [f if os.path.isabs(f) else os.path.join(root, f)
-                 for f in files]
-        return [_FileSlice(paths[i:i + k], self._schema_json, renames)
-                for i in range(0, len(paths), k)]
+        return _plan_slices(self._table, s, e, self._schema_json,
+                            self._per_part, self._changes)
 
     # -- executor-side read ---------------------------------------------
     def read(self, partition: _FileSlice) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        want = to_arrow_schema(
-            StructType.fromJson(json.loads(partition.schema_json)))
-        meta = {_CHANGE_TYPE, _COMMIT_GEN}
-        data_fields = [f for f in want if f.name not in meta]
-        chains = {f.name: [f.name,
-                           *partition.renames.get(f.name, ())]
-                  for f in data_fields}
-        for idx, path in enumerate(partition.paths):
-            tbl = pq.read_table(path)
-            cols = []
-            for field in data_fields:
-                # a file carries exactly one name of a rename chain
-                # (retirement forbids reuse) — first present wins;
-                # delete slices carry ONLY their key column, so every
-                # other field projects NULL by the same rule
-                have = next((c for c in chains[field.name]
-                             if c in tbl.column_names), None)
-                if (partition.kind == "delete"
-                        and have is not None
-                        and partition.key not in chains[field.name]):
-                    have = None  # stray column in a delete file
-                if have is not None:
-                    col = tbl.column(have)
-                    if col.type != field.type:
-                        col = col.cast(field.type)
-                else:  # pre-evolution file: later-added column -> NULL
-                    col = pa.nulls(tbl.num_rows, type=field.type)
-                cols.append(col)
-            names = [f.name for f in data_fields]
-            if partition.kind != "row":
-                kind = ("insert" if partition.kind == "insert"
-                        else "delete")
-                gen = partition.gens[idx]
-                cols.append(pa.array([kind] * tbl.num_rows,
-                                     type=pa.string()))
-                cols.append(pa.array([gen] * tbl.num_rows,
-                                     type=pa.int64()))
-                names += [_CHANGE_TYPE, _COMMIT_GEN]
-            out = pa.table(dict(zip(names, cols))).cast(
-                pa.schema(want))
-            yield from out.to_batches()
+        for tbl in _read_slice(partition):
+            yield from tbl.to_batches()
 
     def commit(self, end: dict) -> None:
         # manifests are durable; the checkpoint owns progress — only
@@ -537,30 +628,38 @@ class VersionedTableDataSource(DataSource):
 
     def schema(self) -> StructType:
         _ensure_importable(self.options.get("pkg_parent"))
-        from mc_ns_data_pipeline_spark.sinks import versioned as V
-
-        table = self.options["table"]
-        cur = V.current_snapshot(table)
-        if cur is None:
-            raise V.NoCurrentSnapshotError(table)
-        schema = V.table_schema(table, cur)
-        if schema is None:
-            raise ValueError(
-                f"{table}: snapshot {cur} predates schema stamping — "
-                "pass an explicit .schema(...) to readStream")
-        if self.options.get("changes", "false") == "true":
-            from pyspark.sql.types import LongType, StringType
-
-            from pyspark.sql.types import StructField as SF
-            schema = StructType(
-                list(schema.fields)
-                + [SF(_CHANGE_TYPE, StringType(), False),
-                   SF(_COMMIT_GEN, LongType(), False)])
-        return schema
+        return _feed_schema(
+            self.options["table"],
+            self.options.get("changes", "false") == "true")
 
     def streamReader(self, schema: StructType
                      ) -> VersionedTableStreamReader:
         return VersionedTableStreamReader(schema, dict(self.options))
+
+    def reader(self, schema: StructType) -> "_ChangeBatchReader":
+        return _ChangeBatchReader(schema, dict(self.options))
+
+
+class _ChangeBatchReader(DataSourceReader):
+    """A batch read of the change events in (``start``, ``end``]: the
+    CDC runners' path for a batch past the driver budget, one Spark
+    task per planned slice, each running `_read_slice`."""
+
+    def __init__(self, schema: StructType, options: dict[str, str]):
+        self._options = options
+        self._schema_json = schema.json()
+
+    def partitions(self) -> Sequence[InputPartition]:
+        o = self._options
+        _ensure_importable(o.get("pkg_parent"))
+        return _plan_slices(o["table"], o["start"], o["end"],
+                            self._schema_json, 1, changes=True)
+
+    def read(self, partition: _FileSlice | None) -> Iterator:
+        if partition is None:  # Spark's one task for zero partitions
+            return
+        for tbl in _read_slice(partition):
+            yield from tbl.to_batches()
 
 
 def _register(spark: SparkSession) -> str:
@@ -604,7 +703,8 @@ def read_stream_table(spark: SparkSession, table: str,
     ``Trigger.AvailableNow`` a capped run admits exactly ONE bounded
     batch and terminates with backlog remaining (availableNow
     captures the first offer as the run end) — loop availableNow
-    runs until caught up, as the public CDC runners do. Pass
+    runs until caught up (the public CDC runners drain in a driver
+    loop instead, with no stream; module header). Pass
     ``checkpoint`` (the same checkpointLocation the writer uses) so a
     restarted stream re-seeds its admission floor from Spark's offset
     log; without it, the first batch after a restart is uncapped
@@ -652,7 +752,10 @@ def read_stream_changes(spark: SparkSession, table: str,
     vacuumed resume points, admission control via
     ``max_commits_per_trigger`` / ``max_files_per_trigger`` /
     ``checkpoint`` — including the availableNow one-bounded-batch-
-    per-run caveat) matches ``read_stream_table``."""
+    per-run caveat) matches ``read_stream_table``. The public CDC
+    runners do not open this stream: they read the same batches in a
+    driver loop (``_plan_slices``, ``_read_slice``,
+    ``read_change_batch``)."""
     pkg_parent = _register(spark)
     r = (spark.readStream.format("versioned_table")
          .option("table", table)
@@ -666,3 +769,19 @@ def read_stream_changes(spark: SparkSession, table: str,
     if checkpoint:
         r = r.option("checkpoint", checkpoint)
     return r.load()
+
+
+def read_change_batch(spark: SparkSession, table: str, start: str,
+                      end: str, schema: StructType) -> DataFrame:
+    """The change events in (start, end] as a batch DataFrame of
+    ``schema`` (`_feed_schema`), read by Spark tasks through the
+    registered datasource — the same slices and per-file read as
+    ``read_stream_changes``, for a batch too large to read on the
+    driver."""
+    pkg_parent = _register(spark)
+    return (spark.read.format("versioned_table").schema(schema)
+            .option("table", table)
+            .option("start", start)
+            .option("end", end)
+            .option("pkg_parent", pkg_parent)
+            .load())

@@ -10,8 +10,8 @@ The 100 TB claims to verify, all through the public
   files plus one equality-delete mask, the replica is never
   rewritten (per-batch apply time flat across the drain);
 * ``max_commits_per_trigger`` bounds every batch: a backlog of
-  N commits drains as ⌈N/cap⌉ checkpointed batches (one bounded
-  batch per availableNow run, looped until caught up);
+  N commits drains as ⌈N/cap⌉ batches of the runner's driver loop,
+  each recorded in the checkpoint's write-ahead cursor first;
 * a KILL mid-drain (simulated: the batch hook raises) resumes from
   the last committed batch and finishes exactly-once —
   replica ≡ source at the end.
@@ -130,7 +130,7 @@ def main() -> None:
     half = len(batch_times) // 2
     print(f"capped drain via PUBLIC runner: {n_commits} commits as "
           f"{expect_batches} batches (cap {cap}, +1 replayed after "
-          f"kill) in {dt:6.1f} s wall incl. per-run lifecycles; "
+          f"kill) in {dt:6.1f} s wall; "
           f"replica == source ({len(want)} rows)", flush=True)
     print(f"per-batch {'matview+apply' if with_view else 'apply'}: "
           f"first-half median "

@@ -173,41 +173,135 @@ def test_capped_drain_kill_mid_drain_resumes_exactly_once(
     assert V.list_refs(rep) == {}
 
 
-def test_uncapped_drain_pays_exactly_one_lifecycle(
-        spark, tmp_path, monkeypatch):
-    """BASELINE r11: the drain loop's caught-up check is metadata-only
-    — an UNCAPPED call builds the stream feed exactly once (one
-    availableNow lifecycle), while a capped call builds one feed per
-    bounded batch. Pinned by counting read_stream_changes
-    constructions through the loop."""
-    import mc_ns_data_pipeline_spark.streaming.table_source as TS
+def test_drain_batches_start_no_streaming_query(spark, tmp_path):
+    """The drain is a driver loop: an uncapped call applies a 4-commit
+    backlog as ONE batch, a call capped at 2 as two, and neither
+    starts a streaming query (onQueryStarted fires synchronously
+    inside start(), so the listener count is exact)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Starts(StreamingQueryListener):
+        n = 0
+
+        def onQueryStarted(self, event):
+            Starts.n += 1
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
 
     src, rep, ckpt, mark = _setup(spark, tmp_path)
     for i in range(4, 8):
         V.append_snapshot(_df(spark, [(i, f"v{i}")]), src)
+    listener = Starts()
+    spark.streams.addListener(listener)
+    try:
+        uncapped: list[int] = []
+        run_stream_apply_changes(
+            spark, src, rep, ckpt, "k", starting=mark,
+            on_batch=lambda bid, s, b: uncapped.append(bid))
+        assert uncapped == [0]
+        assert _state(spark, rep) == _state(spark, src)
 
-    calls = []
-    real = TS.read_stream_changes
+        rep2 = str(tmp_path / "rep2")
+        V.write_snapshot(V.read_snapshot(spark, src, mark), rep2)
+        capped: list[int] = []
+        run_stream_apply_changes(
+            spark, src, rep2, str(tmp_path / "ckpt2"), "k",
+            starting=mark, max_commits_per_trigger=2,
+            on_batch=lambda bid, s, b: capped.append(bid))
+        assert capped == [0, 1]  # ceil(4 commits / cap 2)
+        assert _state(spark, rep2) == _state(spark, src)
+    finally:
+        spark.streams.removeListener(listener)
+    assert Starts.n == 0
 
-    def counting(*a, **kw):
-        calls.append(1)
-        return real(*a, **kw)
 
-    monkeypatch.setattr(TS, "read_stream_changes", counting)
-    run_stream_apply_changes(spark, src, rep, ckpt, "k",
-                             starting=mark)
-    assert len(calls) == 1          # uncapped: one lifecycle
+def test_driver_net_rule_matches_window(spark):
+    """_net_rows (the driver's net actions) equals _net_actions (the
+    window) on an equal-generation retract + reinsert, a re-delete, a
+    reinsert after a delete, NULL groups and a NULL key."""
+    import pyarrow as pa
+
+    from mc_ns_data_pipeline_spark.streaming.incremental import (
+        _net_actions,
+        _net_rows,
+    )
+
+    schema = ("k int, g string, v double, _change_type string, "
+              "_commit_gen long")
+    rows = [
+        (1, None, None, "delete", 3), (1, "a", 1.5, "insert", 3),
+        (2, None, None, "delete", 2), (2, None, None, "delete", 4),
+        (3, None, None, "delete", 2), (3, None, 7.0, "insert", 5),
+        (4, "b", 2.0, "insert", 2), (4, None, None, "delete", 6),
+        (4, None, 3.0, "insert", 6),
+        (5, None, 9.0, "insert", 1),
+        (None, "c", 1.0, "insert", 2), (None, None, None, "delete", 3),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    want = {tuple(r) for r in _net_actions(df, "k").drop("_rn")
+            .collect()}
+    tbl = pa.Table.from_pylist(
+        [r.asDict() for r in df.collect()],
+        schema=df.toArrow().schema)
+    got = {tuple(r.values()) for r in _net_rows(tbl, "k").to_pylist()}
+    assert got == want
+    assert {(r[0], r[3]) for r in got} == {
+        (1, "insert"), (2, "delete"), (3, "insert"), (4, "insert"),
+        (5, "insert"), (None, "delete")}
+
+
+def test_legacy_streaming_checkpoint_is_adopted(spark, tmp_path):
+    """A checkpoint holding the Structured Streaming runner's offsets/
+    and commits/ logs is adopted: the planned-but-uncommitted batch
+    replays first with its logged id and bounds (not re-planned under
+    the new call's cap), then the drain continues. Batch 0 planned
+    but uncommitted under starting="current" has no logged start and
+    refuses with LegacyCheckpointError instead of skipping it."""
+    from mc_ns_data_pipeline_spark.streaming.table_source import (
+        LegacyCheckpointError,
+        read_stream_changes,
+    )
+
+    src, rep, ckpt, mark = _setup(spark, tmp_path)
+    for i in range(4, 10):
+        V.append_snapshot(_df(spark, [(i, f"v{i}")]), src)
+
+    def legacy_run(ckpt_dir, fail_at):
+        def apply(b, bid):
+            if bid == fail_at:
+                raise RuntimeError("simulated crash")
+            apply_change_batch(spark, b, rep, "k", f"cdc_apply-{bid}")
+
+        q = (read_stream_changes(spark, src, starting=mark,
+                                 max_commits_per_trigger=2,
+                                 checkpoint=ckpt_dir)
+             .writeStream.foreachBatch(apply)
+             .option("checkpointLocation", ckpt_dir)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+
+    legacy_run(ckpt, fail_at=None)         # batch 0 commits
+    with pytest.raises(Exception, match="simulated crash"):
+        legacy_run(ckpt, fail_at=1)        # batch 1 planned only
+    seen: list[tuple[int, set]] = []
+    run_stream_apply_changes(
+        spark, src, rep, ckpt, "k", starting=mark,
+        max_commits_per_trigger=1,
+        on_batch=lambda bid, s, b: seen.append(
+            (bid, {r.k for r in b.collect()})))
+    assert seen == [(1, {6, 7}), (2, {8}), (3, {9})]
     assert _state(spark, rep) == _state(spark, src)
 
-    ckpt2 = str(tmp_path / "ckpt2")
-    rep2 = str(tmp_path / "rep2")
-    V.write_snapshot(V.read_snapshot(spark, src, mark), rep2)
-    calls.clear()
-    run_stream_apply_changes(spark, src, rep2, ckpt2, "k",
-                             starting=mark,
-                             max_commits_per_trigger=2)
-    assert len(calls) == 2          # ceil(4/2) bounded runs
-    assert _state(spark, rep2) == _state(spark, src)
+    fresh = str(tmp_path / "ckpt_b0")
+    with pytest.raises(Exception, match="simulated crash"):
+        legacy_run(fresh, fail_at=0)
+    with pytest.raises(LegacyCheckpointError):
+        run_stream_apply_changes(spark, src, rep, fresh, "k",
+                                 starting="current")
 
 
 def test_apply_is_single_commit_with_widened_mask(spark, tmp_path):

@@ -321,3 +321,113 @@ def test_driver_view_delta_falls_back_past_its_bound(spark, tmp_path,
                         lambda *a: calls.append(real(*a)) or calls[-1])
     assert _drive_view(spark, tmp_path, "slow", True) == want
     assert calls == [None] * len(_BATCHES)
+
+
+# ---------------------------------------------------------------------------
+# The drain loop's write-ahead cursor and its two batch reads.
+# ---------------------------------------------------------------------------
+
+
+def _events(batch_df):
+    return sorted((tuple(r) for r in batch_df.collect()), key=repr)
+
+
+def test_crash_before_cursor_commit_replays_recorded_bounds(spark,
+                                                             tmp_path):
+    """A crash after the view commit and the replica apply, before the
+    cursor advances: the rerun, under a different cap, first replays
+    the recorded batch with its recorded id and bounds (its view merge
+    is stamp-skipped, its apply is unit-idempotent), then plans the
+    rest under the new cap. The view counts each event once."""
+    src, rep, view, ckpt, mark = _setup(spark, tmp_path)
+    V.append_snapshot(_df(spark, [(4, "b", 40.0)]), src)
+    V.merge_snapshot_mor(spark, _df(spark, [(1, "b", 15.0)]), src, "k")
+    V.delete_keys_mor(spark, src, "k",
+                      _df(spark, [(2, "b", 0.0)]).select("k"))
+    V.append_snapshot(_df(spark, [(5, "c", 50.0)]), src)
+
+    crashed = []
+
+    def crash(bid, s, b):
+        crashed.append((bid, _events(b)))
+        raise RuntimeError("simulated crash before the cursor commit")
+
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_stream_matview(spark, src, rep, view, ckpt, "k", "g", "val",
+                           starting=mark, max_commits_per_trigger=2,
+                           on_batch=crash)
+    assert [bid for bid, _ in crashed] == [0]
+    view_after_crash = V.current_snapshot(view)
+    seen = []
+    run_stream_matview(spark, src, rep, view, ckpt, "k", "g", "val",
+                       starting=mark, max_commits_per_trigger=1,
+                       on_batch=lambda bid, s, b: seen.append(
+                           (bid, _events(b))))
+    assert seen[0] == crashed[0]  # same id, same two commits' events
+    assert [bid for bid, _ in seen] == [0, 1, 2]  # then cap 1
+    assert {r[0] for r in seen[1][1]} == {2}
+    assert V.read_snapshot(spark, view, view_after_crash).count() > 0
+    assert _view(spark, view) == _want(spark, src)
+    assert ({tuple(r) for r in V.read_current(spark, rep).collect()}
+            == {tuple(r) for r in V.read_current(spark, src).collect()})
+
+
+def test_first_call_records_its_start(spark, tmp_path):
+    """A first call at starting="current" with nothing to apply still
+    records its position, so commits made before the second call are
+    applied by it, not skipped as "before current"."""
+    src, rep, view, ckpt, mark = _setup(spark, tmp_path)
+    run_stream_matview(spark, src, rep, view, ckpt, "k", "g", "val",
+                       starting="current")
+    V.append_snapshot(_df(spark, [(4, "b", 40.0)]), src)
+    V.delete_keys_mor(spark, src, "k",
+                      _df(spark, [(1, "a", 0.0)]).select("k"))
+    run_stream_matview(spark, src, rep, view, ckpt, "k", "g", "val",
+                       starting="current")
+    assert _view(spark, view) == _want(spark, src) == {
+        ("a", 1, 30.0), ("b", 2, 60.0)}
+
+
+def _drain_all(spark, tmp_path, tag):
+    src, rep, view, ckpt, mark = _setup(spark, tmp_path / tag)
+    V.append_snapshot(_df(spark, [(4, "b", 40.0), (5, None, 5.0)]), src)
+    V.merge_snapshot_mor(spark, _df(spark, [(3, "b", 35.0)]), src, "k")
+    V.delete_keys_mor(spark, src, "k",
+                      _df(spark, [(1, "a", 0.0)]).select("k"))
+    V.append_snapshot(_df(spark, [(1, "c", 11.0)]), src)
+    V.delete_keys_mor(spark, src, "k",
+                      _df(spark, [(1, "a", 0.0)]).select("k"))
+    counts = []
+
+    def count(bid, s, b):
+        counts.append((bid, sorted(
+            (r[0], r[1]) for r in b.groupBy("_change_type").count()
+            .collect())))
+
+    run_stream_matview(spark, src, rep, view, ckpt, "k", "g", "val",
+                       starting=mark, max_commits_per_trigger=2,
+                       on_batch=count)
+    return ({tuple(r) for r in V.read_current(spark, rep).collect()},
+            sorted((tuple(r) for r in V.read_current(spark, view)
+                    .collect()), key=repr),
+            counts)
+
+
+def test_spark_read_path_matches_driver_path(spark, tmp_path,
+                                             monkeypatch):
+    """Past the driver budget Spark tasks read the batch and the
+    window nets it: the replica, the view and the events on_batch
+    sees are the driver path's."""
+    from mc_ns_data_pipeline_spark.streaming import table_source as TS
+
+    reads = []
+    real = TS.read_change_batch
+    monkeypatch.setattr(TS, "read_change_batch",
+                        lambda *a: reads.append(1) or real(*a))
+    driver = _drain_all(spark, tmp_path, "driver")
+    assert reads == []
+    monkeypatch.setattr(V, "_DRIVER_LAND_BYTES", 0)
+    tasks = _drain_all(spark, tmp_path, "tasks")
+    assert len(reads) == 3  # ceil(5 commits / cap 2), all in Spark
+    assert tasks == driver
+    assert [bid for bid, _ in driver[2]] == [0, 1, 2]
